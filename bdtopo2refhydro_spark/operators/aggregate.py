@@ -221,45 +221,6 @@ def aggregate_segments(edges_nodes: DataFrame, key: str = "url",
     return single_out.unionByName(multi_out)
 
 
-def kth_smallest_bisect(df, col: str, ks: list[int],
-                        max_rounds: int = 70) -> dict[int, int]:
-    """Exact k-th smallest elements (1-indexed ranks, duplicates
-    counted) of an integer column WITHOUT a global sort: value-domain
-    bisection. Invariant per rank k: answer ∈ [lo, hi]; each round
-    probes mid = (lo+hi)//2 with a conditional count and keeps the
-    half where count(v <= mid) first reaches k. All still-active
-    ranks share ONE aggregation per round (one sum per distinct
-    midpoint), and a count aggregation is map-side only — zero
-    shuffle, so the whole selection is O(log range) cheap scans of a
-    cached input instead of one full-sort exchange. The classic
-    distributed selection trade: scans are embarrassingly parallel at
-    any scale, sorts are not.
-
-    Returns {k: value}. Ranks must satisfy 1 <= k <= count(df)."""
-    src = df.select(F.col(col).alias("v")).cache()
-    try:
-        b = src.agg(F.min("v").alias("lo"), F.max("v").alias("hi")).first()
-        state = {k: [int(b["lo"]), int(b["hi"])] for k in ks}
-        for _ in range(max_rounds):
-            active = {k: (lo + hi) // 2
-                      for k, (lo, hi) in state.items() if lo < hi}
-            if not active:
-                break
-            mids = sorted(set(active.values()))
-            row = src.agg(*[
-                F.sum(F.when(F.col("v") <= F.lit(m), 1).otherwise(0))
-                .alias(f"c{i}") for i, m in enumerate(mids)]).first()
-            cnt = {m: int(row[f"c{i}"]) for i, m in enumerate(mids)}
-            for k, m in active.items():
-                if cnt[m] >= k:
-                    state[k][1] = m
-                else:
-                    state[k][0] = m + 1
-        return {k: lo for k, (lo, hi) in state.items()}
-    finally:
-        src.unpersist()
-
-
 def dense_index(df, order_col: str, *, out: str = "idx",
                 num_partitions: int | None = None):
     """0-based dense row index in `order_col` order (values must be

@@ -1421,44 +1421,3 @@ def apriori_triples(baskets: DataFrame, minsup: int, *,
                     F.col("b2").cast("long").alias("b"),
                     F.col("c3").cast("long").alias("c"),
                     F.col("cnt").cast("long").alias("cnt")))
-
-
-def pareto_layers(df: DataFrame, x_col: str, y_col: str, *,
-                  group_col: str = "g", max_rounds: int = 400
-                  ) -> DataFrame:
-    """Onion peeling of the 2D dominance order (both axes minimized):
-    layer 1 = the Pareto skyline, layer k = the skyline after peeling
-    layers < k. Engine = the literal PEEL loop (per round one
-    group-partitioned running-min window, remove, repeat). The oracle
-    instead uses Mirsky's theorem — layer(p) = longest dominance
-    chain ending at p — a recursive longest-chain walk, so two
-    independent characterizations must agree point-for-point. Returns
-    (g, x, y, layer) over DISTINCT points."""
-    from ._ckpt import CheckpointSlots
-
-    slots = CheckpointSlots()
-    pts = (df.select(F.col(group_col).alias("g"),
-                     F.col(x_col).cast("long").alias("x"),
-                     F.col(y_col).cast("long").alias("y"))
-           .distinct().localCheckpoint(eager=False))
-    remaining = slots.checkpoint(pts, "pl")
-    out = None
-    for k in range(1, max_rounds + 1):
-        per_x = (remaining.groupBy("g", "x")
-                 .agg(F.min("y").alias("y")))
-        w = (Window.partitionBy("g").orderBy("x")
-             .rowsBetween(Window.unboundedPreceding, -1))
-        sky = (per_x.withColumn("_pm", F.min("y").over(w))
-               .where(F.col("_pm").isNull()
-                      | (F.col("y") < F.col("_pm")))
-               .select("g", "x", "y")
-               .withColumn("layer", F.lit(k).cast("long")))
-        sky = sky.localCheckpoint(eager=False)
-        if not sky.take(1):
-            break
-        out = sky if out is None else out.unionByName(sky)
-        remaining = slots.checkpoint(
-            remaining.join(sky.select("g", "x", "y"),
-                           ["g", "x", "y"], "left_anti"),
-            f"pl{k % 2}")
-    return out

@@ -4,8 +4,8 @@ The reference's geometry work (buffering, endpoint snapping, zonal
 clipping — create_exutoire.py / create_5m_width_hydro_network.py) is
 per-feature; these are the set-level geometric primitives a web-scale
 geoparsed corpus needs on top: convex hulls of point clouds (coverage
-footprints), closest-pair (duplicate-beacon detection), segment
-intersection joins and rectangle overlap joins (layout/bbox analytics).
+footprints), segment intersection joins and rectangle overlap joins
+(layout/bbox analytics).
 
 Scale posture (the same discipline as operators/spatial.py):
 
@@ -108,78 +108,6 @@ def convex_hull(points: DataFrame, group_col: str = "g",
 
     return partial.groupBy("g").applyInPandas(
         _final, "g long, x long, y long, hull_pos long")
-
-
-# ---------------------------------------------------------------------------
-# closest pair
-# ---------------------------------------------------------------------------
-
-
-def closest_pair(points: DataFrame, group_col: str = "g",
-                 id_col: str = "id", x_col: str = "x", y_col: str = "y",
-                 cell: int = 1024, max_rounds: int = 6) -> DataFrame:
-    """Exact closest pair per group via the grid certificate: bucket by
-    cells of side ``cell``, candidate pairs = 3x3 neighbor join, take
-    the per-group min of (d2, a, b). If the winning d2 <= cell^2 the
-    answer is CERTIFIED exact (any pair at distance <= cell shares
-    adjacent cells, so the true closest pair was a candidate).
-    Uncertified groups — no candidate, or min > cell^2 — escalate to
-    cell*4 and re-run; the loop is the same resolution-doubling
-    certificate as spatial.knn_join. Returns (g, d2, a, b) with the
-    lexicographic-min (d2, a, b) as the deterministic tie-break.
-    """
-    base = points.select(
-        F.col(group_col).alias("g"), F.col(id_col).cast("long").alias("id"),
-        F.col(x_col).cast("long").alias("x"),
-        F.col(y_col).cast("long").alias("y"))
-    base = base.localCheckpoint(eager=False)
-
-    results = []
-    remaining = base
-    for _ in range(max_rounds):
-        c = int(cell)
-        p = remaining.select(
-            "g", "id", "x", "y",
-            F.floor(F.col("x") / c).cast("long").alias("cx"),
-            F.floor(F.col("y") / c).cast("long").alias("cy"))
-        offsets = F.expr(
-            "explode(array(" + ", ".join(
-                f"struct({dx}L as dx, {dy}L as dy)"
-                for dx in (-1, 0, 1) for dy in (-1, 0, 1)) + "))")
-        left = p.select("g", "id", "x", "y", "cx", "cy",
-                        offsets.alias("o")).select(
-            "g", "id", "x", "y",
-            (F.col("cx") + F.col("o.dx")).alias("jx"),
-            (F.col("cy") + F.col("o.dy")).alias("jy"))
-        right = p.select(
-            "g", F.col("id").alias("nid"), F.col("x").alias("nx"),
-            F.col("y").alias("ny"), F.col("cx").alias("jx"),
-            F.col("cy").alias("jy"))
-        pairs = (left.join(right, ["g", "jx", "jy"])
-                 .filter(F.col("id") < F.col("nid")))
-        d2 = ((F.col("x") - F.col("nx")) * (F.col("x") - F.col("nx"))
-              + (F.col("y") - F.col("ny")) * (F.col("y") - F.col("ny")))
-        best = (pairs.select("g", d2.alias("d2"), F.col("id").alias("a"),
-                             F.col("nid").alias("b"))
-                .groupBy("g")
-                .agg(F.min(F.struct("d2", "a", "b")).alias("m"))
-                .select("g", F.col("m.d2").alias("d2"),
-                        F.col("m.a").alias("a"), F.col("m.b").alias("b")))
-        certified = best.filter(F.col("d2") <= F.lit(c) * F.lit(c))
-        certified = certified.localCheckpoint(eager=False)
-        results.append(certified)
-        done = {r["g"] for r in certified.select("g").collect()}  # tiny:
-        # one row per finished group (diagnostic-size, like knn_join's
-        # per-round certificate check)
-        remaining = remaining.filter(~F.col("g").isin(done)) \
-            if done else remaining
-        cell *= 4
-        if not remaining.take(1):
-            break
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -642,264 +642,6 @@ def functional_graph_cycles(f: DataFrame, *, node: str = "node",
     return out
 
 
-def strongly_connected_components(edges: DataFrame, *,
-                                  src: str = "src", dst: str = "dst",
-                                  max_outer: int = 30,
-                                  max_rounds: int = 200,
-                                  metrics: TraversalMetrics | None = None
-                                  ) -> DataFrame:
-    """SCC on a directed graph by the distributed COLORING algorithm
-    (Orzan; Slota et al.) — undirected CC answers the wrong question
-    for directed reachability (CLAUDE.md pins this), and Tarjan/
-    Kosaraju are sequential DFS. Per outer iteration:
-
-      1. TRIM: peel nodes with no in- or no out-edges in the remaining
-         subgraph (each is a singleton SCC) until stable;
-      2. COLOR: propagate max node id FORWARD to fixpoint —
-         color(v) = max id that reaches v; color classes partition the
-         remaining nodes and every SCC lies inside one class;
-      3. BACKWARD FLAG: from each class root r (color(r) = r),
-         propagate a flag BACKWARD over intra-class edges; the flagged
-         members of class r are exactly SCC(r) — at minimum the
-         globally-max id's SCC resolves every iteration;
-      4. remove resolved nodes and repeat.
-
-    Every step is joins + aggregations with CheckpointSlots lineage
-    control; no DFS, no driver-side graph. scc_id = min node id of the
-    component (matching the mutual-reachability oracle). Returns
-    (node, scc_id).
-    """
-    from ._ckpt import CheckpointSlots
-
-    slots = CheckpointSlots()
-    e = slots.checkpoint(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .distinct(), "e")
-    remaining = slots.checkpoint(
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node"))).distinct(), "rem")
-    assigned = None
-
-    def _acc(base, new):
-        out = new if base is None else base.union(new)
-        out = slots.checkpoint(out, "assigned")
-        out.count()
-        return out
-
-    for outer in range(max_outer):
-        n_rem = remaining.count()
-        if n_rem == 0:
-            break
-        # ---- 1. trim loop: no-in or no-out nodes are singleton SCCs
-        # Alternate core slots: checkpointing round k's core into the
-        # SAME slot would free round k-1's blocks while `remaining`
-        # still points at them and the anti-join below still reads them
-        # (a freed LogicalRDD cannot recompute — bit us on a fixture
-        # needing 2+ trim rounds). Release the superseded core only
-        # AFTER the trimmed batch is materialized.
-        trim_flip = 0
-        while True:
-            has_out = e.select(F.col("u").alias("node")).distinct()
-            has_in = e.select(F.col("v").alias("node")).distinct()
-            core = slots.checkpoint(
-                remaining.join(has_out, "node", "left_semi")
-                .join(has_in, "node", "left_semi"), f"core{trim_flip}")
-            n_core = core.count()
-            if n_core == n_rem:
-                break
-            trimmed = remaining.join(core, "node", "left_anti") \
-                .select("node", F.col("node").alias("scc_id"))
-            assigned = _acc(assigned, trimmed)
-            slots.release(f"core{1 - trim_flip}")
-            trim_flip = 1 - trim_flip
-            remaining = core
-            e = slots.checkpoint(
-                e.join(core.withColumnRenamed("node", "u"), "u",
-                       "left_semi")
-                .join(core.withColumnRenamed("node", "v"), "v",
-                      "left_semi"), "e")
-            n_rem = n_core
-            if metrics is not None:
-                metrics.add(op="scc", outer=outer, trimmed_to=n_core)
-        if n_rem == 0:
-            break
-        # ---- 2. forward max-color propagation to fixpoint
-        col = slots.checkpoint(
-            remaining.select("node", F.col("node").alias("c")), "col")
-
-        def _sig(df):
-            return df.select(
-                F.expr("bit_xor(xxhash64(node, c))").alias("h")).first()["h"]
-
-        sig = _sig(col)
-        with loop_profile(e, n_rem):
-            for i in range(max_rounds):
-                inc = (e.join(col.withColumnRenamed("node", "u"), "u")
-                       .select(F.col("v").alias("node"), "c"))
-                new_col = slots.checkpoint(
-                    col.select("node", "c").union(inc)
-                    .groupBy("node").agg(F.max("c").alias("c")), "col")
-                new_sig = _sig(new_col)
-                col = new_col
-                if metrics is not None:
-                    metrics.add(op="scc", outer=outer, color_round=i)
-                if new_sig == sig:
-                    break
-                sig = new_sig
-        # ---- 3. backward flag within color classes
-        cu = col.select(F.col("node").alias("u"), F.col("c").alias("_cu"))
-        cv = col.select(F.col("node").alias("v"), F.col("c").alias("_cv"))
-        e_c = slots.checkpoint(
-            e.join(cu, "u").join(cv, "v")
-            .where(F.col("_cu") == F.col("_cv"))
-            .select("u", "v", F.col("_cu").alias("c")), "ec")
-        e_c.count()
-        flags = slots.checkpoint(
-            col.where(F.col("c") == F.col("node")).select("node", "c"),
-            "flags")
-        n_f = flags.count()
-        with loop_profile(e_c, n_rem):
-            for i in range(max_rounds):
-                step = (e_c.join(flags.withColumnRenamed("node", "v")
-                                 .select("v"), "v", "left_semi")
-                        .select(F.col("u").alias("node"), "c"))
-                new_flags = slots.checkpoint(
-                    flags.union(step).distinct(), "flags")
-                n_new = new_flags.count()
-                flags = new_flags
-                if metrics is not None:
-                    metrics.add(op="scc", outer=outer, flag_round=i,
-                                flagged=n_new)
-                if n_new == n_f:
-                    break
-                n_f = n_new
-        scc_min = flags.groupBy("c").agg(F.min("node").alias("scc_id"))
-        members = (flags.join(scc_min, "c")
-                   .select("node", "scc_id"))
-        assigned = _acc(assigned, members)
-        remaining = slots.checkpoint(
-            remaining.join(flags.select("node"), "node", "left_anti"),
-            "rem")
-        e = slots.checkpoint(
-            e.join(remaining.withColumnRenamed("node", "u"), "u",
-                   "left_semi")
-            .join(remaining.withColumnRenamed("node", "v"), "v",
-                  "left_semi"), "e")
-    return assigned
-
-
-def greedy_matching(edges: DataFrame, *, eid: str = "eid",
-                    src: str = "u", dst: str = "v", weight: str = "w",
-                    rounds: int = 12,
-                    metrics: TraversalMetrics | None = None
-                    ) -> DataFrame:
-    """Maximal matching by parallel greedy local minima — the
-    symmetry-breaking round pattern (Israeli–Itai / Luby family): each
-    round, an edge joins the matching iff its (w, eid) is the minimum
-    among ALL alive edges touching either endpoint (itself included);
-    matched endpoints and their incident edges then drop out. With a
-    total order on (w, eid) this computes EXACTLY the sequential
-    greedy-by-weight matching — but in parallel rounds (O(log n)
-    expected on random weights), each round two aggregations and two
-    semi-joins, no driver-side edge list.
-
-    ``rounds`` is a FIXED count (kcore_peel convention) so a
-    non-recursive oracle replays the exact schedule; at scale run
-    enough rounds for convergence (alive hits zero and further rounds
-    are no-ops). Returns the matched edges (eid, u, v, w).
-    """
-    alive = (edges.select(F.col(eid).alias("eid"),
-                          F.col(src).alias("u"), F.col(dst).alias("v"),
-                          F.col(weight).alias("w"))
-             .localCheckpoint(eager=False))
-    matched = None
-    for i in range(rounds):
-        inc = (alive.select(F.col("u").alias("n"), "w", "eid")
-               .union(alive.select(F.col("v").alias("n"), "w", "eid")))
-        nmin = (inc.groupBy("n")
-                .agg(F.min(F.struct("w", "eid")).alias("m"))
-                .select("n", F.col("m.w").alias("_mw"),
-                        F.col("m.eid").alias("_me")))
-        mu = nmin.select(F.col("n").alias("u"),
-                         F.col("_mw").alias("_wu"),
-                         F.col("_me").alias("_eu"))
-        mv = nmin.select(F.col("n").alias("v"),
-                         F.col("_mw").alias("_wv"),
-                         F.col("_me").alias("_ev"))
-        hit = (alive.join(mu, "u").join(mv, "v")
-               .where((F.col("_eu") == F.col("eid"))
-                      & (F.col("_ev") == F.col("eid")))
-               .select("eid", "u", "v", "w")
-               .localCheckpoint(eager=False))
-        n_hit = hit.count()
-        if metrics is not None:
-            metrics.add(op="greedy_matching", round=i, matched=n_hit)
-        if n_hit == 0:
-            break
-        matched = hit if matched is None else matched.union(hit)
-        matched = matched.localCheckpoint(eager=False)
-        used = (hit.select(F.col("u").alias("n"))
-                .union(hit.select(F.col("v").alias("n"))).distinct())
-        alive = (alive
-                 .join(used.withColumnRenamed("n", "u"), "u",
-                       "left_anti")
-                 .join(used.withColumnRenamed("n", "v"), "v",
-                       "left_anti")
-                 .localCheckpoint(eager=False))
-    if matched is None:
-        return alive.select("eid", "u", "v", "w").limit(0)
-    return matched
-
-
-def luby_mis(edges: DataFrame, *, src: str = "u", dst: str = "v",
-             rounds: int = 12,
-             metrics: TraversalMetrics | None = None) -> DataFrame:
-    """Maximal independent set by Luby-style local minima — the node
-    sibling of greedy_matching: each round, an alive node joins the
-    MIS iff its id is smaller than every alive neighbor's; MIS nodes'
-    neighbors then drop out. With ids as the (total-order) priority
-    this equals the sequential greedy MIS in id order, computed in
-    parallel rounds. Fixed ``rounds`` (kcore convention) for oracle
-    replay; isolated nodes join in round 0. Returns (node, mis_round).
-    """
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .where(F.col("u") != F.col("v"))
-         .localCheckpoint(eager=False))
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    alive = (sym.select(F.col("u").alias("node")).distinct()
-             .localCheckpoint(eager=False))
-    adj = sym.localCheckpoint(eager=False)
-    out = None
-    for i in range(rounds):
-        nbr_min = (adj.join(alive.withColumnRenamed("node", "u"), "u",
-                            "left_semi")
-                   .join(alive.withColumnRenamed("node", "v"), "v",
-                         "left_semi")
-                   .groupBy("u").agg(F.min("v").alias("_mn")))
-        winners = (alive.join(nbr_min.withColumnRenamed("u", "node"),
-                              "node", "left")
-                   .where(F.col("_mn").isNull()
-                          | (F.col("node") < F.col("_mn")))
-                   .select("node",
-                           F.lit(i).cast("int").alias("mis_round"))
-                   .localCheckpoint(eager=False))
-        n_w = winners.count()
-        if metrics is not None:
-            metrics.add(op="luby_mis", round=i, winners=n_w)
-        if n_w == 0:
-            break
-        out = winners if out is None else out.union(winners)
-        out = out.localCheckpoint(eager=False)
-        blocked = (adj.join(winners.withColumnRenamed("node", "u")
-                            .select("u"), "u", "left_semi")
-                   .select(F.col("v").alias("node")).distinct())
-        alive = (alive
-                 .join(winners.select("node"), "node", "left_anti")
-                 .join(blocked, "node", "left_anti")
-                 .localCheckpoint(eager=False))
-    return out
-
-
 def temporal_reachability(edges: DataFrame, sources: DataFrame, *,
                           src: str = "u", dst: str = "v",
                           time_col: str = "t", max_rounds: int = 64,
@@ -994,93 +736,6 @@ def dag_levels(edges: DataFrame, *, src: str = "u", dst: str = "v",
             break
         sig = new_sig
     return lv
-
-
-def bipartite_check(edges: DataFrame, *, src: str = "u",
-                    dst: str = "v") -> DataFrame:
-    """Per-component bipartiteness by the DOUBLED-GRAPH trick: in G'
-    with nodes (v, side) and edges (u,0)-(v,1) and (u,1)-(v,0), a
-    component of G is bipartite iff (v,0) and (v,1) land in DIFFERENT
-    G' components — odd cycles are exactly what merges them. One extra
-    CC run (O(log n) hash-to-min) instead of any BFS layering or
-    coloring conflict loop; encodes side in the id as 2v / 2v+1.
-    Returns (l, n_nodes, is_bipartite) with l = min node id of the
-    component."""
-    e = edges.select(F.col(src).cast("long").alias("u"),
-                     F.col(dst).cast("long").alias("v")) \
-        .localCheckpoint(eager=False)
-    adj = (e.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
-           .union(e.select(F.col("v").alias("node"),
-                           F.col("u").alias("nbr"))))
-    comp = connected_components(adj)  # (node, l)
-    d_adj = (e.select((F.col("u") * 2).alias("node"),
-                      (F.col("v") * 2 + 1).alias("nbr"))
-             .union(e.select((F.col("u") * 2 + 1).alias("node"),
-                             (F.col("v") * 2).alias("nbr")))
-             .union(e.select((F.col("v") * 2 + 1).alias("node"),
-                             (F.col("u") * 2).alias("nbr")))
-             .union(e.select((F.col("v") * 2).alias("node"),
-                             (F.col("u") * 2 + 1).alias("nbr"))))
-    dcomp = connected_components(d_adj)  # (node, l) on doubled ids
-    merged = (dcomp.select((F.col("node") / 2).cast("long").alias("n0"),
-                           F.col("l").alias("dl"),
-                           (F.col("node") % 2).alias("side"))
-              .groupBy("n0")
-              .agg(F.count_distinct("dl").alias("_ndl")))
-    # a node whose two sides share one doubled-component sits on an
-    # odd closed walk -> its whole component is non-bipartite
-    flag = (comp.join(merged.withColumnRenamed("n0", "node"), "node")
-            .groupBy("l")
-            .agg(F.count("*").cast("long").alias("n_nodes"),
-                 (F.min(F.col("_ndl")) == 2).alias("is_bipartite")))
-    return flag
-
-
-def two_sat(clauses: DataFrame, *, inst: str = "inst",
-            cols=("v1", "s1", "v2", "s2")) -> DataFrame:
-    """Distributed 2-SAT over many instances at once: each clause
-    (l1 OR l2) contributes implications ¬l1→l2 and ¬l2→l1 on the
-    per-instance implication graph (literal node id = inst·2V + 2v +
-    sign); an instance is satisfiable iff NO variable shares an SCC
-    with its negation (Aspvall–Plass–Tarjan), and the SCC pass is the
-    engine's distributed coloring SCC — thousands of instances solve
-    in ONE graph pass because instance ids namespace the nodes.
-    cols = (var1, negated1, var2, negated2) with negated ∈ {0,1}
-    meaning the literal is ¬x. Returns (inst, satisfiable)."""
-    v1, s1, v2, s2 = cols
-    c = clauses.select(
-        F.col(inst).cast("long").alias("i"),
-        F.col(v1).cast("long").alias("a"),
-        F.col(s1).cast("long").alias("sa"),
-        F.col(v2).cast("long").alias("b"),
-        F.col(s2).cast("long").alias("sb"))
-    nvars = c.agg(F.max(F.greatest("a", "b"))).first()[0] + 1
-
-    def lit(var, sign):
-        return F.col("i") * (2 * nvars) + F.col(var) * 2 + sign
-
-    def neg(var, sign_col):
-        return (F.col("i") * (2 * nvars) + F.col(var) * 2
-                + (1 - F.col(sign_col)))
-
-    imp = (c.select(neg("a", "sa").alias("src"),
-                    lit("b", F.col("sb")).alias("dst"))
-           .union(c.select(neg("b", "sb").alias("src"),
-                           lit("a", F.col("sa")).alias("dst"))))
-    scc = strongly_connected_components(imp)  # (node, scc_id)
-    pos = scc.select((F.col("node") / 2).cast("long").alias("pv"),
-                     (F.col("node") % 2).alias("side"), "scc_id")
-    confl = (pos.groupBy("pv", "scc_id")
-             .agg(F.count_distinct("side").alias("_k"))
-             .filter(F.col("_k") == 2)
-             .select((F.col("pv") / nvars).cast("long").alias("i"))
-             .distinct()
-             .withColumn("_bad", F.lit(True)))
-    insts = c.select("i").distinct()
-    return (insts.join(confl, "i", "left")
-            .select(F.col("i").alias("inst"),
-                    F.coalesce(~F.col("_bad"), F.lit(True))
-                    .alias("satisfiable")))
 
 
 def shortest_path_counts(edges: DataFrame, source: int = 0, *,
@@ -1513,259 +1168,6 @@ def jp_coloring(edges: DataFrame, *, src: str = "u", dst: str = "v",
     return colored
 
 
-def euler_path_check(edges: DataFrame, *, src: str = "u",
-                     dst: str = "v") -> DataFrame:
-    """Eulerian path/circuit classification per connected component
-    (the de Bruijn / route-inspection precondition): component labels
-    from the O(log) min-label CC, degree parity from one groupBy —
-    a component admits an Eulerian CIRCUIT iff every degree is even,
-    a PATH iff exactly two are odd, else neither. Returns one row per
-    component: (comp, n_nodes, n_edges, n_odd, kind)."""
-    e = (edges.select(
-            F.least(F.col(src).cast("long"),
-                    F.col(dst).cast("long")).alias("a"),
-            F.greatest(F.col(src).cast("long"),
-                       F.col(dst).cast("long")).alias("b"))
-         .where(F.col("a") != F.col("b")).distinct()
-         .localCheckpoint(eager=False))
-    adj = (e.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-           .union(e.select(F.col("b").alias("node"),
-                           F.col("a").alias("nbr"))))
-    cc = connected_components(adj)  # (node, l)
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
-    nodes = (cc.join(deg, "node")
-             .select("node", F.col("l").alias("comp"), "deg"))
-    ecomp = (e.join(cc.withColumnRenamed("node", "a"), "a")
-             .groupBy(F.col("l").alias("comp"))
-             .agg(F.count(F.lit(1)).alias("n_edges")))
-    per = (nodes.groupBy("comp")
-           .agg(F.count(F.lit(1)).alias("n_nodes"),
-                F.sum(F.when(F.col("deg") % 2 == 1, 1).otherwise(0))
-                .cast("long").alias("n_odd")))
-    return (per.join(ecomp, "comp")
-            .withColumn("kind",
-                        F.when(F.col("n_odd") == 0, F.lit("circuit"))
-                        .when(F.col("n_odd") == 2, F.lit("path"))
-                        .otherwise(F.lit("none"))))
-
-
-def biconnected_components(edges: DataFrame, *, src: str = "u",
-                           dst: str = "v") -> DataFrame:
-    """Biconnected components by TARJAN-VISHKIN (the 1985 parallel
-    biconnectivity algorithm) — entirely joins + the repo's O(log)
-    primitives, no DFS low-link recursion:
-
-    1. Borůvka spanning tree + Euler tour → per non-root vertex v its
-       tree edge (p(v), v), preorder number pre(v) (= dense_index of
-       enter positions — the enter order IS a preorder of the tree)
-       and subtree size nd(v) = (exit − enter + 1)/2. Ancestry is the
-       interval test pre(u) ≤ pre(w) < pre(u) + nd(u).
-    2. low(v)/high(v) = min/max preorder reachable from subtree(v) by
-       one non-tree edge (or pre itself): per-node min/max of
-       non-tree neighbor preorders, then a SUBTREE range reduction —
-       subtrees are CONTIGUOUS preorder intervals, so both are batch
-       range-min queries over the preorder sequence
-       (rmq_sparse_table; max via negation).
-    3. The auxiliary graph on tree edges (vertex = child v):
-       rule 1 — non-tree edge {u, w}, neither an ancestor of the
-       other ⟹ join u–w; rule 2 — tree edge (v, p), p ≠ root, and
-       low(v) < pre(p) or high(v) ≥ pre(p) + nd(p) (some non-tree
-       edge escapes subtree(p)) ⟹ join v–p. Connected components of
-       the auxiliary graph are the blocks (isolated aux vertices =
-       single-edge blocks).
-    4. Every original edge gets its block: a tree edge (p(v), v) the
-       block of v; a non-tree edge the block of its larger-preorder
-       endpoint (for a back edge that is the descendant; for an
-       unrelated pair rule 1 makes both sides equal). Block labels
-       are canonicalized to the block's minimal edge packed as
-       a·2³² + b, independent of the spanning tree chosen (a bare
-       min-endpoint would collide for two bridges sharing a vertex).
-
-    Requires a connected graph, node ids in [0, 2^31). Returns
-    (a, b, block) for every distinct undirected edge."""
-    from .aggregate import dense_index
-    from .temporal import rmq_sparse_table
-
-    e = (edges.select(
-            F.least(F.col(src).cast("long"),
-                    F.col(dst).cast("long")).alias("a"),
-            F.greatest(F.col(src).cast("long"),
-                       F.col(dst).cast("long")).alias("b"))
-         .where(F.col("a") != F.col("b")).distinct()
-         .localCheckpoint(eager=False))
-    ew = e.select(
-        (F.col("a") * F.lit(1 << 32) + F.col("b")).alias("eid"),
-        F.col("a").alias("u"), F.col("b").alias("v"),
-        (F.col("a") * F.lit(1 << 32) + F.col("b")).alias("w"))
-    tree = (boruvka_mst(ew)
-            .select(F.col("u").alias("a"), F.col("v").alias("b"))
-            .localCheckpoint(eager=False))
-    n_nodes = e.select("a").union(e.select(F.col("b").alias("a"))) \
-        .distinct().count()
-    if tree.count() != n_nodes - 1:
-        raise ValueError("biconnected_components requires a connected "
-                         "graph")
-    root = int(e.agg(F.min("a")).first()[0])
-    tour = euler_tour(tree, root=root, src="a", dst="b")
-    und = tour.select(F.least("u", "v").alias("a"),
-                      F.greatest("u", "v").alias("b"),
-                      "pos", F.col("v").alias("head"))
-    iv = (und.groupBy("a", "b")
-          .agg(F.min(F.struct("pos", "head")).alias("_dn"),
-               F.max("pos").alias("exit"))
-          .select("a", "b", F.col("_dn.head").alias("node"),
-                  F.col("_dn.pos").alias("enter"), "exit"))
-    allv = iv.select("node", "enter", "exit",
-                     ((F.col("exit") - F.col("enter") + 1) / 2)
-                     .cast("long").alias("nd")) \
-        .unionByName(iv.sparkSession.createDataFrame(
-            [(root, -1, 0, n_nodes)],
-            "node long, enter long, exit long, nd long")
-            .withColumn("nd", F.lit(n_nodes).cast("long")))
-    pv = dense_index(allv, "enter", out="pre") \
-        .select("node", "pre", "nd").localCheckpoint(eager=False)
-    # parent per non-root vertex
-    par = iv.select(F.col("node"),
-                    (F.col("a") + F.col("b") - F.col("node"))
-                    .alias("parent")).localCheckpoint(eager=False)
-    nt = e.join(tree, ["a", "b"], "left_anti") \
-        .localCheckpoint(eager=False)
-    # per-node min/max preorder over {self} ∪ nontree neighbors
-    pre_of = pv.select(F.col("node"), F.col("pre"))
-    nbrpre = (nt.select(F.col("a").alias("node"), F.col("b").alias("o"))
-              .union(nt.select(F.col("b").alias("node"),
-                               F.col("a").alias("o")))
-              .join(pre_of.withColumnRenamed("node", "o")
-                    .withColumnRenamed("pre", "opre"), "o")
-              .groupBy("node")
-              .agg(F.min("opre").alias("nmin"),
-                   F.max("opre").alias("nmax")))
-    vals = (pv.join(nbrpre, "node", "left")
-            .select("node", "pre", "nd",
-                    F.least("pre", F.col("nmin")).alias("vmin"),
-                    F.greatest("pre", F.col("nmax")).alias("vmax"))
-            .withColumn("vmin", F.coalesce("vmin", F.col("pre")))
-            .withColumn("vmax", F.coalesce("vmax", F.col("pre")))
-            .localCheckpoint(eager=False))
-    # low/high = range min/max of vmin/vmax over preorder interval
-    seq_min = vals.select(F.col("pre").alias("i"),
-                          F.col("vmin").alias("v"))
-    seq_maxn = vals.select(F.col("pre").alias("i"),
-                           (-F.col("vmax")).alias("v"))
-    qs = vals.select(F.col("node").alias("qid"),
-                     F.col("pre").alias("l"),
-                     (F.col("pre") + F.col("nd") - 1).alias("r"))
-    low = rmq_sparse_table(seq_min, qs).withColumnRenamed("mn", "low") \
-        .withColumnRenamed("qid", "node")
-    high = rmq_sparse_table(seq_maxn, qs) \
-        .select(F.col("qid").alias("node"), (-F.col("mn")).alias("high"))
-    vinfo = (pv.join(low, "node").join(high, "node")
-             .localCheckpoint(eager=False))
-    # rule 1: unrelated nontree pairs join their tree edges (aux: u—w)
-    pu = vinfo.select(F.col("node").alias("a_"),
-                      F.col("pre").alias("pu"), F.col("nd").alias("ndu"))
-    pw = vinfo.select(F.col("node").alias("b_"),
-                      F.col("pre").alias("pw"), F.col("nd").alias("ndw"))
-    ntp = (nt.join(pu, nt["a"] == pu["a_"])
-           .join(pw, nt["b"] == pw["b_"]))
-    unrelated = ntp.where(
-        ~((F.col("pu") <= F.col("pw"))
-          & (F.col("pw") < F.col("pu") + F.col("ndu")))
-        & ~((F.col("pw") <= F.col("pu"))
-            & (F.col("pu") < F.col("pw") + F.col("ndw"))))
-    aux1 = unrelated.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    # rule 2: tree edge (v,p), p != root, escape test on subtree(p)
-    pinfo = vinfo.select(F.col("node").alias("parent"),
-                         F.col("pre").alias("ppre"),
-                         F.col("nd").alias("pnd"))
-    r2 = (par.where(F.col("parent") != root)
-          .join(vinfo.select("node", "low", "high"), "node")
-          .join(pinfo, "parent")
-          .where((F.col("low") < F.col("ppre"))
-                 | (F.col("high") >= F.col("ppre") + F.col("pnd"))))
-    aux2 = r2.select(F.col("node").alias("x"), F.col("parent").alias("y"))
-    aux = aux1.unionByName(aux2)
-    adj = aux.select(F.col("x").alias("node"), F.col("y").alias("nbr")) \
-        .union(aux.select(F.col("y").alias("node"),
-                          F.col("x").alias("nbr")))
-    cc = connected_components(adj)
-    blocks = (par.select("node")
-              .join(cc, "node", "left")
-              .select("node", F.coalesce("l", F.col("node"))
-                      .alias("blk")))
-    # tree edges -> block of child; nontree -> block of larger-pre end
-    te = iv.select("a", "b", "node").join(blocks, "node") \
-        .select("a", "b", "blk")
-    deeper = ntp.select(
-        "a", "b",
-        F.when(F.col("pu") >= F.col("pw"), F.col("a"))
-        .otherwise(F.col("b")).alias("node"))
-    ne = deeper.join(blocks, "node").select("a", "b", "blk")
-    allb = te.unionByName(ne).localCheckpoint(eager=False)
-    # canonical labels: the block's MINIMAL EDGE packed into one
-    # BIGINT (min endpoint alone is NOT unique across blocks — two
-    # bridges sharing a vertex would collide)
-    canon = allb.groupBy("blk").agg(
-        F.min(F.col("a") * F.lit(1 << 32) + F.col("b")).alias("block"))
-    return (allb.join(canon, "blk")
-            .select("a", "b", "block"))
-
-
-def articulation_points(edges: DataFrame, *, src: str = "u",
-                        dst: str = "v") -> DataFrame:
-    """Articulation (cut) vertices: exactly the vertices belonging to
-    ≥ 2 biconnected blocks (block-cut-tree fact) — one distinct-count
-    over the per-edge block labels of `biconnected_components`.
-    Returns (node, is_art)."""
-    bc = biconnected_components(edges, src=src, dst=dst) \
-        .localCheckpoint(eager=False)
-    inc = (bc.select(F.col("a").alias("node"), "block")
-           .union(bc.select(F.col("b").alias("node"), "block")))
-    return (inc.groupBy("node")
-            .agg(F.countDistinct("block").alias("nb"))
-            .select("node", (F.col("nb") >= 2).alias("is_art")))
-
-
-def transitive_closure_counts(edges: DataFrame, *, src: str = "u",
-                              dst: str = "v", max_doublings: int = 40
-                              ) -> DataFrame:
-    """Reachable-set sizes by PATH DOUBLING: R ← R ∪ R∘R squares the
-    reachability relation each round, so an L-long path closes in
-    ⌈log₂ L⌉ rounds instead of L BFS steps — the O(log) transitive
-    closure. The self-join-on-own-frame loop uses the two-layer
-    checkpoint+cache discipline (stats squaring AND plan-tree
-    doubling both bite otherwise — CLAUDE.md). Pair count is the
-    closure's size; use on DAGs / sparse reachability where |R*| is
-    bounded. Returns (u, n_reach) counting strictly-forward
-    reachable nodes."""
-    from ._ckpt import CheckpointSlots
-
-    slots = CheckpointSlots()
-    r = slots.checkpoint(
-        edges.select(F.col(src).cast("long").alias("u"),
-                     F.col(dst).cast("long").alias("v")).distinct(),
-        "tc0")
-    cached = r.cache()
-    n = cached.count()
-    for i in range(max_doublings):
-        squared = (cached.alias("a")
-                   .join(cached.select(F.col("u").alias("v"),
-                                       F.col("v").alias("w")).alias("b"),
-                         "v")
-                   .select("u", F.col("w").alias("v")))
-        nxt = slots.checkpoint(
-            cached.unionByName(squared).distinct(),
-            f"tc{(i % 2) + 1}")
-        nc = nxt.cache()
-        m = nc.count()
-        cached.unpersist()
-        cached = nc
-        if m == n:
-            break
-        n = m
-    return cached.groupBy("u").agg(F.count(F.lit(1)).alias("n_reach"))
-
-
 def count_four_cycles(edges: DataFrame, *, src: str = "u",
                       dst: str = "v") -> DataFrame:
     """Exact 4-cycle count via the CODEGREE identity: every
@@ -1793,58 +1195,6 @@ def count_four_cycles(edges: DataFrame, *, src: str = "u",
     # on overflow instead of silently rounding)
     return codeg.agg(
         F.expr("sum(c * (c - 1)) div 4").alias("n_c4"))
-
-
-def apsp_minplus(edges: DataFrame, *, src: str = "u", dst: str = "v",
-                 weight: str = "w", max_doublings: int = 40
-                 ) -> DataFrame:
-    """All-pairs shortest paths by MIN-PLUS MATRIX SQUARING — the
-    tropical-semiring sibling of transitive_closure_counts: each
-    round D ← min(D, D∘D) where (D∘D)[i,j] = min_k D[i,k] + D[k,j]
-    (one self-join + one groupBy-min), so an L-hop shortest path
-    settles in ⌈log₂ L⌉ rounds instead of L Bellman-Ford
-    relaxations. Non-negative integer weights ⟹ exact. Two-layer
-    checkpoint+cache on the self-join loop; convergence by an
-    order-free bit_xor state fingerprint (ANSI-safe, CLAUDE.md).
-    Returns (u, v, dist) for every reachable ordered pair with
-    u ≠ v (cycle-closing diagonal candidates are dropped each round —
-    with non-negative weights they can never shorten a path)."""
-    from ._ckpt import CheckpointSlots
-
-    slots = CheckpointSlots()
-    d = slots.checkpoint(
-        edges.select(F.col(src).cast("long").alias("u"),
-                     F.col(dst).cast("long").alias("v"),
-                     F.col(weight).cast("long").alias("w"))
-        .groupBy("u", "v").agg(F.min("w").alias("w")), "ap0")
-    cached = d.cache()
-
-    def _sig(df):
-        return df.select(
-            F.expr("bit_xor(xxhash64(u, v, w))").alias("h")).first()["h"]
-
-    sig = _sig(cached)
-    for i in range(max_doublings):
-        sq = (cached.alias("a")
-              .join(cached.select(F.col("u").alias("v"),
-                                  F.col("v").alias("t"),
-                                  F.col("w").alias("w2")).alias("b"),
-                    "v")
-              .where(F.col("u") != F.col("t"))
-              .select("u", F.col("t").alias("v"),
-                      (F.col("w") + F.col("w2")).alias("w")))
-        nxt = slots.checkpoint(
-            cached.unionByName(sq).groupBy("u", "v")
-            .agg(F.min("w").alias("w")),
-            f"ap{(i % 2) + 1}")
-        nc = nxt.cache()
-        new_sig = _sig(nc)
-        cached.unpersist()
-        cached = nc
-        if new_sig == sig:
-            break
-        sig = new_sig
-    return cached.select("u", "v", F.col("w").alias("dist"))
 
 
 def bom_rollup(edges: DataFrame, *, src: str = "u", dst: str = "v",
@@ -1900,46 +1250,6 @@ def bom_rollup(edges: DataFrame, *, src: str = "u", dst: str = "v",
     # sums: fold them
     return (total.groupBy("root", "part")
             .agg(F.sum("qty").alias("qty")))
-
-
-def horn_closure(facts: DataFrame, rules: DataFrame, *,
-                 inst: str = "inst", atom: str = "atom",
-                 b1: str = "b1", b2: str = "b2", head: str = "h",
-                 max_rounds: int = 200) -> DataFrame:
-    """Horn-clause forward chaining (unit propagation / Datalog
-    closure) per instance: a rule h ← b1 ∧ b2 fires once BOTH body
-    atoms are derived — frontier rounds joining the fixed rule frame
-    twice, to an order-free fixpoint. The monotone closure is
-    engine-order-independent, so the result is a pure function of
-    (facts, rules). Returns the derived-atom set (inst, atom)."""
-    from ._ckpt import CheckpointSlots
-
-    slots = CheckpointSlots()
-    r = rules.select(F.col(inst).alias("inst"), F.col(b1).alias("b1"),
-                     F.col(b2).alias("b2"), F.col(head).alias("h")) \
-        .localCheckpoint(eager=False)
-    derived = slots.checkpoint(
-        facts.select(F.col(inst).alias("inst"),
-                     F.col(atom).alias("atom")).distinct(), "hc")
-    n = derived.count()
-    for _ in range(max_rounds):
-        fired = (r.join(derived.withColumnRenamed("atom", "b1"),
-                        ["inst", "b1"])
-                 .join(derived.withColumnRenamed("atom", "b2"),
-                       ["inst", "b2"])
-                 .select("inst", F.col("h").alias("atom")))
-        derived = slots.checkpoint(
-            derived.unionByName(fired).distinct(), "hc2")
-        m = derived.count()
-        if m == n:
-            break
-        n = m
-        derived = slots.checkpoint(derived, "hc")
-    else:
-        raise RuntimeError(
-            f"horn_closure: fixpoint not reached within "
-            f"max_rounds={max_rounds} rounds; raise max_rounds")
-    return derived
 
 
 def earliest_arrival(edges: DataFrame, source: int, *, src: str = "u",

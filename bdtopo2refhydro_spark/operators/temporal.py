@@ -414,43 +414,6 @@ def gap_fill_counts(df: DataFrame, *, key_col: str,
                     F.coalesce("n", F.lit(0)).cast("long").alias("n")))
 
 
-def haar_dwt(df: DataFrame, *, group_col: str = "g", t_col: str = "t",
-             v_col: str = "v", levels: int = 3) -> DataFrame:
-    """Unnormalized Haar wavelet transform per series: level ℓ detail
-    coefficients a−b and the final scaling (approximation) row a+b,
-    computed as ``levels`` rounds of pairwise groupBy aggregations —
-    each round HALVES the series (map-side combined; no window, no
-    sort), which is the transform's own O(n) work laid onto shuffles
-    of shrinking size. All-integer (unnormalized), so bit-exact.
-    Requires t dense 0..2^m−1 per group. Returns
-    (group, level, idx, coef) with level=ℓ for details and
-    level=``levels`` for the surviving approximations."""
-    cur = df.select(F.col(group_col).alias("g"),
-                    F.col(t_col).cast("long").alias("t"),
-                    F.col(v_col).cast("long").alias("v"))
-    outs = []
-    for lvl in range(levels):
-        agg = (cur.groupBy("g", F.expr("t div 2").alias("idx"))
-               .agg(F.sum(F.when(F.col("t") % 2 == 0, F.col("v"))
-                          .otherwise(0)).alias("a"),
-                    F.sum(F.when(F.col("t") % 2 == 1, F.col("v"))
-                          .otherwise(0)).alias("b")))
-        outs.append(agg.select(
-            "g", F.lit(lvl).cast("long").alias("level"),
-            F.col("idx").cast("long").alias("idx"),
-            (F.col("a") - F.col("b")).cast("long").alias("coef")))
-        cur = agg.select("g", F.col("idx").alias("t"),
-                         (F.col("a") + F.col("b")).alias("v"))
-    outs.append(cur.select(
-        "g", F.lit(levels).cast("long").alias("level"),
-        F.col("t").cast("long").alias("idx"),
-        F.col("v").cast("long").alias("coef")))
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
 def interval_stab_counts(intervals: DataFrame, points: DataFrame, *,
                          s_col: str = "s", e_col: str = "e",
                          qid_col: str = "qid", p_col: str = "p",
@@ -524,85 +487,6 @@ def asof_join_forward(left: DataFrame, right: DataFrame, key: str,
         "row.*",
         F.when(ok, F.col("_pv")).otherwise(F.lit(default))
         .cast("long").alias(out_col))
-
-
-def greedy_interval_count(iv: DataFrame, *, g: str = "g", s: str = "s",
-                          e: str = "e", iid: str = "iid",
-                          max_doublings: int = 40) -> DataFrame:
-    """Greedy maximum non-overlapping interval selection per group —
-    the classic earliest-deadline-first schedule, WITHOUT a sequential
-    scan: the greedy chain is a functional graph, so
-
-    1. next(i) = the interval minimizing (e, iid) among those with
-       s >= e_i — computed for EVERY interval at once by the union
-       as-of trick: intervals enter a per-group stream twice (an
-       EVENT at t = s carrying pack(e, iid), a PROBE at t = e_i),
-       sorted by t DESC with events before probes at equal t, and a
-       running min window (partitioned by group — fully distributed,
-       no global window) hands each probe the best compatible
-       successor;
-    2. chain length to the end via POINTER DOUBLING over next()
-       (O(log chain) self-join rounds, two-layer checkpoint+cache);
-    3. the answer per group is the chain length at the greedy start,
-       argmin (e, s, iid).
-
-    Touching intervals (s_j == e_i) are compatible. e and iid must be
-    non-negative with e < 2^31, iid < 2^31 (packed into one BIGINT
-    for a single-column min). Returns (g, n_selected)."""
-    from ._ckpt import CheckpointSlots
-
-    slots = CheckpointSlots()
-    base = iv.select(F.col(g).alias("g"),
-                     F.col(s).cast("long").alias("s"),
-                     F.col(e).cast("long").alias("e"),
-                     F.col(iid).cast("long").alias("iid")) \
-        .localCheckpoint(eager=False)
-    pack = (F.col("e") * F.lit(1 << 31) + F.col("iid"))
-    ev = base.select("g", F.col("s").alias("t"),
-                     F.lit(0).alias("pr"), pack.alias("val"),
-                     F.lit(None).cast("long").alias("iid"))
-    probe = base.select("g", F.col("e").alias("t"),
-                        F.lit(1).alias("pr"),
-                        F.lit(None).cast("long").alias("val"),
-                        "iid")
-    w = Window.partitionBy("g").orderBy(F.desc("t"), F.asc("pr")) \
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    nxt = (ev.unionByName(probe)
-           .withColumn("best", F.min("val").over(w))
-           .where(F.col("pr") == 1)
-           .select("g", "iid",
-                   (F.col("best") % F.lit(1 << 31)).alias("nxt")))
-    # pointer doubling: acc = #selected from this interval onward
-    frame = slots.checkpoint(
-        base.select("g", "iid").join(nxt, ["g", "iid"], "left")
-        .select("g", "iid", F.col("nxt").alias("ptr"),
-                F.lit(1).cast("long").alias("acc")), "iv0")
-    cached = frame.cache()
-    cached.count()
-    for i in range(max_doublings):
-        nx = (cached.alias("a")
-              .join(cached.select(F.col("g").alias("g2"),
-                                  F.col("iid").alias("ptr"),
-                                  F.col("ptr").alias("p2"),
-                                  F.col("acc").alias("a2")).alias("b"),
-                    (F.col("a.g") == F.col("b.g2"))
-                    & (F.col("a.ptr") == F.col("b.ptr")), "left")
-              .select("a.g", "a.iid",
-                      F.col("b.p2").alias("ptr"),
-                      (F.col("a.acc") + F.coalesce("b.a2", F.lit(0)))
-                      .alias("acc")))
-        nx = slots.checkpoint(nx, f"iv{(i % 2) + 1}")
-        nc = nx.cache()
-        live = nc.where(F.col("ptr").isNotNull()).count()
-        cached.unpersist()
-        cached = nc
-        if live == 0:
-            break
-    start = base.groupBy("g").agg(
-        F.min(F.struct("e", "s", "iid")).alias("m")) \
-        .select("g", F.col("m.iid").alias("iid"))
-    return (start.join(cached, ["g", "iid"])
-            .select("g", F.col("acc").alias("n_selected")))
 
 
 def rmq_sparse_table(seq: DataFrame, queries: DataFrame, *,

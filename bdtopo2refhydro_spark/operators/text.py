@@ -1718,50 +1718,6 @@ def bwt_encode(words: DataFrame, word_col: str = "word",
     ).select(word_col, "_r.bwt", "_r.primary")
 
 
-def distinct_substring_counts(words: DataFrame,
-                              word_col: str = "word") -> DataFrame:
-    """Distinct (non-empty) substring count per word — the
-    subword-richness statistic (n(n+1)/2 minus repeats; the quantity a
-    suffix automaton computes in linear time). Bounded word lengths
-    make the per-word set walk an Arrow UDF over the distinct-word
-    table. Returns (word, n_distinct)."""
-    import pandas as pd
-
-    @F.pandas_udf("long")
-    def _cnt(s: pd.Series) -> pd.Series:
-        def count(w):
-            L = len(w)
-            return len({w[i:j] for i in range(L)
-                        for j in range(i + 1, L + 1)})
-        return s.map(count)
-
-    return words.select(word_col, _cnt(F.col(word_col))
-                        .alias("n_distinct"))
-
-
-def suffix_array(words: DataFrame, word_col: str = "word") -> DataFrame:
-    """Suffix array per distinct word (the substring-search /
-    BWT-companion index): rank(i) = position of suffix w[i:] in the
-    sorted suffix order (codepoint order, matching SQL binary
-    collation). Bounded word lengths → per-word Arrow UDF on the
-    distinct-word table. Returns (word, pos, rank) exploded rows."""
-    import pandas as pd
-
-    @F.pandas_udf("array<struct<pos: long, rank: long>>")
-    def _sa(s: pd.Series) -> pd.Series:
-        def sa(w):
-            order = sorted(range(len(w)), key=lambda i: w[i:])
-            out = [None] * len(w)
-            for r, i in enumerate(order):
-                out[i] = {"pos": i, "rank": r}
-            return out
-        return s.map(sa)
-
-    return (words.select(word_col, F.explode(_sa(F.col(word_col)))
-                         .alias("_e"))
-            .select(word_col, "_e.pos", "_e.rank"))
-
-
 def fix_mojibake(docs: DataFrame, col: str = "text",
                  out_col: str = "fixed") -> DataFrame:
     """Repair UTF-8-as-Latin-1 mojibake ("Ã©" → "é"), the single most
@@ -2025,181 +1981,6 @@ def aho_corasick_counts(docs: DataFrame, patterns: list[str], *,
                       scan(F.lower(F.col(text_col))).alias("r"))
     return res.select(id_col, F.col("r.n_matches").alias("n_matches"),
                       F.col("r.n_pats").alias("n_pats"))
-
-
-def lcp_array(words: DataFrame, word_col: str = "word") -> DataFrame:
-    """LCP array per distinct word by KASAI'S algorithm (linear time,
-    vs the naive O(n²) character comparison the oracle uses): with
-    rank[] the suffix array inverse, walking suffixes in TEXT order
-    lets each LCP start from the previous value minus one — h never
-    grows past n twice, the classic amortization. lcp[r] = longest
-    common prefix of the rank-r and rank-(r-1) suffixes (lcp[0] = 0).
-    Bounded word lengths → per-word Arrow UDF on the distinct-word
-    table, same shape as suffix_array. Returns (word, rank, lcp)."""
-    import pandas as pd
-
-    @F.pandas_udf("array<struct<rank: long, lcp: long>>")
-    def _lcp(s: pd.Series) -> pd.Series:
-        def kasai(w):
-            n = len(w)
-            if n == 0:
-                return []
-            sa = sorted(range(n), key=lambda i: w[i:])
-            rank = [0] * n
-            for r, i in enumerate(sa):
-                rank[i] = r
-            lcp = [0] * n
-            h = 0
-            for i in range(n):
-                r = rank[i]
-                if r == 0:
-                    h = 0
-                    continue
-                j = sa[r - 1]
-                while i + h < n and j + h < n and w[i + h] == w[j + h]:
-                    h += 1
-                lcp[r] = h
-                if h:
-                    h -= 1
-            return [{"rank": r, "lcp": lcp[r]} for r in range(n)]
-        return s.map(kasai)
-
-    return (words.select(word_col, F.explode(_lcp(F.col(word_col)))
-                         .alias("_e"))
-            .select(word_col, "_e.rank", "_e.lcp"))
-
-
-def min_period(words: DataFrame, word_col: str = "word") -> DataFrame:
-    """Smallest period of each word via the REAL KMP failure
-    function: period = n − border(n) where border(n) is the longest
-    proper border (prefix = suffix), computed by the classic linear
-    fallback scan — vs the oracle's O(n²) definitional probe (min p
-    with w[1..n−p] = w[p+1..n]). 'abcabc' → 3, 'aaaa' → 1,
-    aperiodic w → n. Per-word Arrow UDF on the distinct-word
-    table."""
-    import pandas as pd
-
-    @F.pandas_udf("long")
-    def _period(s: pd.Series) -> pd.Series:
-        def per(wd):
-            n = len(wd)
-            if n == 0:
-                return 0
-            fail = [0] * (n + 1)
-            k = 0
-            for i in range(1, n):
-                while k and wd[i] != wd[k]:
-                    k = fail[k]
-                if wd[i] == wd[k]:
-                    k += 1
-                fail[i + 1] = k
-            return n - fail[n]
-        return s.map(per)
-
-    return words.select(word_col, _period(F.col(word_col))
-                        .alias("period"))
-
-
-def longest_palindrome(words: DataFrame, word_col: str = "word"
-                       ) -> DataFrame:
-    """Longest palindromic substring length per word by MANACHER'S
-    linear algorithm (the mirrored-center radius carry-over — the
-    real O(n) one, not center expansion) vs the oracle's O(n²)
-    definitional probe (max window equal to its own reverse).
-    Per-word Arrow UDF on the distinct-word table. Returns
-    (word, pal_len)."""
-    import pandas as pd
-
-    @F.pandas_udf("long")
-    def _pal(s: pd.Series) -> pd.Series:
-        def manacher(w):
-            if not w:
-                return 0
-            t = "#" + "#".join(w) + "#"
-            n = len(t)
-            p = [0] * n
-            c = r = 0
-            best = 0
-            for i in range(n):
-                if i < r:
-                    p[i] = min(r - i, p[2 * c - i])
-                while (i - p[i] - 1 >= 0 and i + p[i] + 1 < n
-                       and t[i - p[i] - 1] == t[i + p[i] + 1]):
-                    p[i] += 1
-                if i + p[i] > r:
-                    c, r = i, i + p[i]
-                best = max(best, p[i])
-            return best
-        return s.map(manacher)
-
-    return words.select(word_col,
-                        _pal(F.col(word_col)).alias("pal_len"))
-
-
-def lz_complexity(words: DataFrame, word_col: str = "word"
-                  ) -> DataFrame:
-    """Lempel-Ziv factor count per word (the LZ77-style complexity
-    measure behind compression-ratio text-quality / bot gates): scan
-    left to right, each factor is the LONGEST prefix of the remainder
-    that already occurs starting strictly earlier (else one new
-    character). Engine = the real greedy scan; oracle precomputes
-    every (pos, len) earlier-occurrence test by brute substring
-    compare and walks the factorization as a linear recursion.
-    Returns (word, n_factors)."""
-    import pandas as pd
-
-    @F.pandas_udf("long")
-    def _lz(s: pd.Series) -> pd.Series:
-        def factors(w):
-            n = len(w)
-            pos, cnt = 0, 0
-            while pos < n:
-                best = 0
-                for l in range(1, n - pos + 1):
-                    seg = w[pos:pos + l]
-                    if w.find(seg, 0, pos + l - 1) != -1:
-                        best = l
-                    else:
-                        break
-                pos += max(1, best)
-                cnt += 1
-            return cnt
-        return s.map(factors)
-
-    return words.select(word_col,
-                        _lz(F.col(word_col)).alias("n_factors"))
-
-
-def mtf_encode_stats(words: DataFrame, word_col: str = "word"
-                     ) -> DataFrame:
-    """Move-to-front coding stats per word (the bzip2 stage between
-    BWT and RLE — locality becomes small codes): initial symbol table
-    = the word's distinct characters SORTED; each character emits its
-    current 0-based position and moves to front. Sequential list
-    state ⟹ engine runs the real scan; the oracle carries the
-    permutation as a LIST column through a recursive CTE. Returns
-    (word, code_sum, max_code)."""
-    import pandas as pd
-
-    @F.pandas_udf("struct<code_sum: long, max_code: long>")
-    def _mtf(s: pd.Series) -> pd.DataFrame:
-        sums, maxs = [], []
-        for w in s:
-            state = sorted(set(w))
-            tot, mx = 0, 0
-            for ch in w:
-                p = state.index(ch)
-                tot += p
-                mx = max(mx, p)
-                state.pop(p)
-                state.insert(0, ch)
-            sums.append(tot)
-            maxs.append(mx)
-        return pd.DataFrame({"code_sum": sums, "max_code": maxs})
-
-    return words.select(word_col, _mtf(F.col(word_col)).alias("r")) \
-        .select(word_col, F.col("r.code_sum").alias("code_sum"),
-                F.col("r.max_code").alias("max_code"))
 
 
 def damerau_levenshtein_pairs(pairs: DataFrame, *, w1: str = "w1",

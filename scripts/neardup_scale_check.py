@@ -85,10 +85,11 @@ def write_corpus(spark, n_fam: int, m: int, n_single: int,
     from pyspark.sql import functions as F  # noqa: F401
 
     n_docs = n_fam * m + n_single
+    # token at rotated position {pos} of family f (see tok() above)
     fam_tok = (
-        "CASE WHEN f % 2 = 0 THEN concat('t', f, '_', p) "
-        "WHEN p = 0 THEN concat('x', f) "
-        "ELSE concat('t', f - 1, '_', p) END"
+        "CASE WHEN f % 2 = 0 THEN concat('t', f, '_', {pos}) "
+        "WHEN {pos} = 0 THEN concat('x', f) "
+        "ELSE concat('t', f - 1, '_', {pos}) END"
     )
     docs = spark.range(0, n_docs, 1, parts).selectExpr(
         "id as doc_id",
@@ -100,7 +101,7 @@ def write_corpus(spark, n_fam: int, m: int, n_single: int,
               concat('s', doc_id, 'a s', doc_id, 'b s', doc_id,
                      'c s', doc_id, 'd s', doc_id, 'e')
             ELSE array_join(transform(sequence(0, {2 * N_TOK - 1}),
-              i -> {fam_tok.replace('p', f'pmod(j + i, {N_TOK})')}), ' ')
+              i -> {fam_tok.format(pos=f'pmod(j + i, {N_TOK})')}), ' ')
             END as text""",
     )
     docs.write.mode("overwrite").parquet(path)

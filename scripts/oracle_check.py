@@ -4,6 +4,13 @@ driver's CORRECTNESS gate.
 
 Usage: python scripts/oracle_check.py [--distributed] [sf_dir] [query ...]
 
+Sized to the machine it runs on: local[$SPARK_GRAFT_CPUS] (default: the
+CPUs this process may use); the Spark driver heap ($SPARK_DRIVER_MEM,
+default at most 40% of MemTotal) and DuckDB's memory limit (40% of
+MemTotal) together leave a fifth of RAM to Python and the OS; and the
+driver's collect cap is half its heap, so an oversized result fails at
+the result-size guard instead of exhausting the heap.
+
 --distributed forces SMALL_GRAPH_ROWS to -1 for the whole run, so every
 traversal takes the distributed code path (checkpointed self-joins, CC,
 chain contraction) instead of the single-task local algorithms — the
@@ -41,6 +48,31 @@ def force_distributed_paths() -> None:
     # fixture of scripts/natural_scale_check.py, contraction from its
     # chain fixture — this forced mode exists to gate contract cheaply.)
     O.MIN_CHAIN_FRACTION = -1.0
+
+def _mem_total_mb() -> int:
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) // 1024
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+
+def _to_mb(size: str) -> int:
+    """Spark memory string ('16g', '1024m', bare number = MiB) -> MiB."""
+    units = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+    size = size.strip().lower().removesuffix("b")
+    if size[-1] in units:
+        return int(float(size[:-1]) * units[size[-1]])
+    return int(size)
+
+
+def box_limits() -> tuple[str, int, int, int]:
+    """(cores, driver heap MiB, driver maxResultSize MiB, DuckDB MiB)."""
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    share = int(_mem_total_mb() * 0.4)
+    heap = _to_mb(os.environ.get("SPARK_DRIVER_MEM") or f"{min(share, 16 * 1024)}m")
+    return cores, heap, heap // 2, share
+
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -87,11 +119,12 @@ def main() -> int:
         force_distributed_paths()
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
+    cores, heap_mb, result_mb, duck_mb = box_limits()
     con = duckdb.connect()
     # big fixtures (sf1): cap DuckDB's memory and let it spill to disk
     # instead of climbing to the box limit (the closure oracles' verify
     # stage materializes shingle lists per candidate pair)
-    con.execute("SET memory_limit='40GB'")
+    con.execute(f"SET memory_limit='{duck_mb}MB'")
     con.execute("SET temp_directory='/tmp/duckdb_spill'")
     for t in TABLES:
         # driver fixtures are single files; scripts/make_sf.py fixtures
@@ -101,9 +134,13 @@ def main() -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
     # big fixtures: quadratic-OUTPUT contracts (containment/lsh_pairs at
     # sf1) collect tens of millions of rows for the pandas compare —
-    # lift the 1g driver collect cap for this harness only
-    spark = get_spark("oracle_check", cores=8, shuffle_partitions=16,
-                      extra_conf={"spark.driver.maxResultSize": "16g"})
+    # lift the 1g driver collect cap for this harness only, keeping it
+    # strictly below the heap
+    spark = get_spark("oracle_check", cores=cores, shuffle_partitions=16,
+                      extra_conf={"spark.driver.memory": f"{heap_mb}m",
+                                  "spark.driver.maxResultSize": f"{result_mb}m"})
+    print(f"local[{cores}], driver heap {heap_mb} MiB, maxResultSize "
+          f"{result_mb} MiB, DuckDB memory_limit {duck_mb} MiB")
     qs, os_ = E.queries(), E.oracle_sql()
     failures = 0
     for name, fn in qs.items():

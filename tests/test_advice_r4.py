@@ -20,26 +20,6 @@ def test_ahu_tree_classes_raises_on_height_cap(spark):
     assert ahu_tree_classes(df).count() == 1
 
 
-def test_tree_mwis_raises_on_cap(spark):
-    from bdtopo2refhydro_spark.operators.orders import tree_mwis
-    e = spark.createDataFrame(
-        [("u", i, i + 1) for i in range(8)],
-        "url string, NODEA long, NODEB long")
-    w = spark.createDataFrame([(i, 1) for i in range(9)],
-                              "node long, w long")
-    with pytest.raises(RuntimeError, match="max_iter"):
-        tree_mwis(e, w, max_iter=2)
-
-
-def test_tree_eccentricity_raises_on_cap(spark):
-    from bdtopo2refhydro_spark.operators.orders import tree_eccentricity
-    e = spark.createDataFrame(
-        [("u", i, i + 1) for i in range(8)],
-        "url string, NODEA long, NODEB long")
-    with pytest.raises(RuntimeError, match="max_iter"):
-        tree_eccentricity(e, max_iter=2)
-
-
 def test_bom_rollup_raises_on_cap(spark):
     from bdtopo2refhydro_spark.operators.graph import bom_rollup
     e = spark.createDataFrame(
@@ -48,17 +28,6 @@ def test_bom_rollup_raises_on_cap(spark):
         bom_rollup(e, max_rounds=2)
     got = {r["part"]: r["qty"] for r in bom_rollup(e).collect()}
     assert got == {i + 1: 2 ** (i + 1) for i in range(6)}
-
-
-def test_horn_closure_raises_on_cap(spark):
-    from bdtopo2refhydro_spark.operators.graph import horn_closure
-    facts = spark.createDataFrame([(1, 0), (1, 1)],
-                                  "inst long, atom long")
-    rules = spark.createDataFrame(
-        [(1, i, i + 1, i + 2) for i in range(8)],
-        "inst long, b1 long, b2 long, h long")
-    with pytest.raises(RuntimeError, match="max_rounds"):
-        horn_closure(facts, rules, max_rounds=2)
 
 
 def test_earliest_arrival_raises_on_cap(spark):

@@ -1,13 +1,10 @@
-"""pareto_skyline vs brute dominance; haar_dwt vs numpy reference;
-mg_heavy_hitters exactness across partitionings."""
+"""pareto_skyline vs brute dominance; mg_heavy_hitters exactness
+across partitionings; irv_rounds vs a python simulation."""
 
 import random
 
-import numpy as np
-
 from bdtopo2refhydro_spark.operators.corpus import (
     mg_heavy_hitters, pareto_skyline)
-from bdtopo2refhydro_spark.operators.temporal import haar_dwt
 
 
 def test_skyline_vs_brute(spark):
@@ -36,22 +33,6 @@ def test_skyline_vs_brute(spark):
     assert got == collapsed
 
 
-def test_haar_dwt_vs_numpy(spark):
-    rng = random.Random(5)
-    v = [rng.randrange(-50, 50) for _ in range(16)]
-    df = spark.createDataFrame([(0, t, x) for t, x in enumerate(v)],
-                               "g long, t long, v long")
-    got = {(r["level"], r["idx"]): r["coef"]
-           for r in haar_dwt(df, levels=4).collect()}
-    cur = np.array(v, dtype=np.int64)
-    for lvl in range(4):
-        a, b = cur[0::2], cur[1::2]
-        for i, c in enumerate(a - b):
-            assert got[(lvl, i)] == c
-        cur = a + b
-    assert got[(4, 0)] == cur[0] == sum(v)
-
-
 def test_mg_heavy_hitters_exact_any_partitioning(spark):
     rng = random.Random(7)
     items = (["hot_a"] * 300 + ["hot_b"] * 200
@@ -70,21 +51,6 @@ def test_mg_heavy_hitters_exact_any_partitioning(spark):
                for r in mg_heavy_hitters(df, "item", 8).collect()}
         assert got == expected, parts
     assert expected  # fixture actually has heavy hitters
-
-
-def test_kth_smallest_bisect_vs_sorted(spark):
-    import random
-
-    from bdtopo2refhydro_spark.operators.aggregate import \
-        kth_smallest_bisect
-
-    rng = random.Random(13)
-    vals = [rng.randrange(-500, 500) for _ in range(1000)] + [7] * 25
-    df = spark.createDataFrame([(v,) for v in vals], "v long")
-    s = sorted(vals)
-    ks = [1, 2, 500, 777, len(vals)]
-    got = kth_smallest_bisect(df, "v", ks)
-    assert got == {k: s[k - 1] for k in ks}
 
 
 def test_irv_rounds_vs_python_simulation(spark):

@@ -152,25 +152,3 @@ def test_ewma_half_caps_rows_per_key(spark):
     out = ewma_half(df, key_col="k", order_col="i", value_col="v",
                     max_n=24).collect()
     assert len(out) == 24
-
-
-def test_decision_stump_hand_computed(spark):
-    """8 rows, feature x separates perfectly at x <= 1; feature z is
-    noise. Exact Gini integers hand-checked for the best split."""
-    rows = [(0, 9, 0), (1, 3, 0), (0, 5, 0), (1, 7, 0),
-            (2, 4, 1), (3, 6, 1), (2, 8, 1), (3, 2, 1)]
-    df = spark.createDataFrame(rows, "x long, z long, y long")
-    from bdtopo2refhydro_spark.operators.ml import decision_stump
-
-    out = decision_stump(df, ["x", "z"]).collect()
-    best = [r for r in out if r["is_best"]]
-    assert len(best) == 1
-    b = best[0]
-    # x <= 1: left (4 rows, 0 pos), right (4 rows, 4 pos) — pure:
-    # num = (0 + 16)*4 + (16 + 0)*4 = 128, den = 16, score = 8.0
-    assert (b["feature"], b["threshold"]) == ("x", 1)
-    assert (b["n_l"], b["n_r"], b["num"], b["den"]) == (4, 4, 128, 16)
-    assert b["score"] == 8.0
-    # every candidate's rational is consistent: score == num/den
-    for r in out:
-        assert r["score"] == r["num"] / r["den"]

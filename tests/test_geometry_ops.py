@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bdtopo2refhydro_spark.operators.geometry import (
-    closest_pair, convex_hull, rect_overlap_join, segment_intersections)
+    convex_hull, rect_overlap_join, segment_intersections)
 
 
 def _extreme_points_brute(pts):
@@ -84,32 +84,6 @@ def test_convex_hull_two_level_matches_single_bucket(spark):
     single = {(r["x"], r["y"], r["hull_pos"])
               for r in convex_hull(df, n_buckets=1).collect()}
     assert multi == single and len(multi) >= 3
-
-
-def test_closest_pair_random_vs_brute(spark):
-    rng = random.Random(11)
-    rows, expected = [], {}
-    for g in range(4):
-        pts = [(i, rng.randrange(0, 5000), rng.randrange(0, 5000))
-               for i in range(80)]
-        best = min(((xa - xb) ** 2 + (ya - yb) ** 2, a, b)
-                   for (a, xa, ya) in pts for (b, xb, yb) in pts if a < b)
-        expected[g] = best
-        rows += [(g, i, x, y) for i, x, y in pts]
-    df = spark.createDataFrame(rows, "g long, id long, x long, y long")
-    got = {r["g"]: (r["d2"], r["a"], r["b"])
-           for r in closest_pair(df, cell=256).collect()}
-    assert got == expected
-
-
-def test_closest_pair_escalates_past_empty_cells(spark):
-    # min distance 3000 >> initial cell 16 -> first rounds uncertified
-    pts = [(0, 0, 0), (1, 3000, 0), (2, 0, 9000)]
-    df = spark.createDataFrame([(1, i, x, y) for i, x, y in pts],
-                               "g long, id long, x long, y long")
-    got = closest_pair(df, cell=16, max_rounds=8).collect()
-    assert [(r["g"], r["d2"], r["a"], r["b"]) for r in got] == \
-        [(1, 3000 * 3000, 0, 1)]
 
 
 def _proper_cross(a, b):

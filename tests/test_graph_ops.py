@@ -559,148 +559,6 @@ def test_functional_cycles_rho_golden(spark):
         20: (True, 20), 21: (True, 20)}
 
 
-def test_scc_coloring_hand_graph(spark):
-    """Two cycles bridged by a DAG path + self-loop + pure sink."""
-    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 4), (5, 6),
-             (6, 7), (7, 7), (9, 9), (9, 1)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    from bdtopo2refhydro_spark.operators.graph import (
-        strongly_connected_components)
-
-    got = {r["node"]: r["scc_id"]
-           for r in strongly_connected_components(df).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6, 7: 7, 9: 9}
-
-
-def test_scc_matches_python_reference_on_lcg_digraph(spark):
-    """SCC == a sequential Tarjan on a pseudo-random functional-ish
-    digraph (every node one out-edge + extra back edges)."""
-    import sys
-
-    n = 60
-    edges = set()
-    for d in range(n):
-        edges.add((d, (d * 7 + 3) % n))
-        if d % 3 == 0 and d >= 1:
-            edges.add((d, d // 2))
-        if d % 11 == 0 and d >= 1:
-            edges.add((d // 2, d))
-    adj = {}
-    for u, v in edges:
-        adj.setdefault(u, []).append(v)
-
-    sys.setrecursionlimit(10000)
-    index = {}
-    low = {}
-    stack, onstk = [], set()
-    counter = [0]
-    comp = {}
-
-    def strong(v):
-        index[v] = low[v] = counter[0]
-        counter[0] += 1
-        stack.append(v)
-        onstk.add(v)
-        for w in adj.get(v, ()):
-            if w not in index:
-                strong(w)
-                low[v] = min(low[v], low[w])
-            elif w in onstk:
-                low[v] = min(low[v], index[w])
-        if low[v] == index[v]:
-            members = []
-            while True:
-                w = stack.pop()
-                onstk.discard(w)
-                members.append(w)
-                if w == v:
-                    break
-            m = min(members)
-            for w in members:
-                comp[w] = m
-
-    nodes = {u for u, _ in edges} | {v for _, v in edges}
-    for v in sorted(nodes):
-        if v not in index:
-            strong(v)
-
-    from bdtopo2refhydro_spark.operators.graph import (
-        strongly_connected_components)
-
-    df = spark.createDataFrame(sorted(edges), "src long, dst long")
-    got = {r["node"]: r["scc_id"]
-           for r in strongly_connected_components(df).collect()}
-    assert got == comp
-
-
-def test_greedy_matching_equals_sequential_greedy(spark):
-    """Parallel local-minima rounds == sequential greedy by weight
-    (unique weights) on an LCG multigraph, and the result is maximal."""
-    edges = []
-    x = 3
-    for i in range(80):
-        x = (x * 1103515245 + 12345) % 2147483648
-        u = x % 30
-        v = (x // 30) % 30
-        if u == v:
-            v = (v + 1) % 30
-        edges.append((f"e{i:03d}", u, v, i * 1000 + (x % 997)))
-
-    used = set()
-    want = set()
-    for eid, u, v, w in sorted(edges, key=lambda t: t[3]):
-        if u not in used and v not in used:
-            used.add(u)
-            used.add(v)
-            want.add(eid)
-
-    from bdtopo2refhydro_spark.operators.graph import greedy_matching
-
-    df = spark.createDataFrame(edges, "eid string, u long, v long, w long")
-    got = {r["eid"] for r in greedy_matching(df, rounds=30).collect()}
-    assert got == want
-    # maximality: every remaining edge touches a matched node
-    matched_nodes = set()
-    by_id = {e[0]: e for e in edges}
-    for eid in got:
-        _, u, v, _ = by_id[eid]
-        matched_nodes |= {u, v}
-    for eid, u, v, w in edges:
-        assert u in matched_nodes or v in matched_nodes
-
-
-def test_luby_mis_equals_sequential_greedy(spark):
-    """Local-minimum rounds == sequential greedy MIS in id order, and
-    the set is independent + maximal."""
-    edges = []
-    x = 11
-    for i in range(70):
-        x = (x * 1103515245 + 12345) % 2147483648
-        u, v = x % 25, (x // 25) % 25
-        if u != v:
-            edges.append((u, v))
-    adj = {}
-    nodes = set()
-    for u, v in edges:
-        adj.setdefault(u, set()).add(v)
-        adj.setdefault(v, set()).add(u)
-        nodes |= {u, v}
-    mis = set()
-    for v in sorted(nodes):
-        if not (adj[v] & mis):
-            mis.add(v)
-
-    from bdtopo2refhydro_spark.operators.graph import luby_mis
-
-    df = spark.createDataFrame(edges, "u long, v long")
-    got = {r["node"] for r in luby_mis(df, rounds=20).collect()}
-    assert got == mis
-    for v in got:
-        assert not (adj[v] & got)          # independent
-    for v in nodes - got:
-        assert adj[v] & got                # maximal
-
-
 def test_temporal_reachability_respects_time(spark):
     """1 -t3-> 2 -t1-> 3: node 3 is NOT time-reachable through 2
     (t1 < t3), but 1 -t5-> 3 direct works; arrival keeps the min."""

@@ -27,3 +27,30 @@ def test_no_duplicate_top_level_defs(path):
                     f"{node.name} (lines {seen[node.name]} and {node.lineno})")
             seen[node.name] = node.lineno
     assert not dupes, f"duplicate top-level defs in {path.name}: {dupes}"
+
+
+def test_entry_module_has_no_orphan_helpers():
+    """Every top-level def and constant of ``__spark_entry__.py`` is
+    reachable from ``entry``, ``queries()`` or ``oracle_sql()``: deleting
+    a registry entry must take its ``_q_*`` builder, ``_*_SQL`` twin and
+    fixture helpers with it."""
+    path = PKG.parent / "__spark_entry__.py"
+    tree = ast.parse(path.read_text(), filename=str(path))
+    defs: dict[str, ast.stmt] = {}
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            defs[node.name] = node
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                if isinstance(t, ast.Name):
+                    defs[t.id] = node
+    seen, todo = set(), ["entry", "queries", "oracle_sql"]
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        todo += [n.id for n in ast.walk(defs[name])
+                 if isinstance(n, ast.Name) and n.id in defs]
+    assert not sorted(set(defs) - seen)

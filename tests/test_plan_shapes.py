@@ -301,37 +301,10 @@ def test_tpch_q22_anti_join_and_scalar_gate(spark, entry):
     assert "CartesianProduct" not in plan
 
 
-def test_tpch_q15_scalar_max_broadcast(spark, entry):
-    """The argmax-with-ties gate: Catalyst rewrites crossJoin(1-row max)
-    + equality filter into a broadcast HASH join on tc = mx — pinned so
-    it never degrades to a nested loop or cartesian."""
-    plan = _plan(entry.queries()["tpch_q15"](spark, SF))
-    assert plan.count("BroadcastHashJoin") >= 2  # scalar gate + supplier
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_tpch_q16_anti_join_and_broadcasts(spark, entry):
     plan = _plan(entry.queries()["tpch_q16"](spark, SF))
     assert "LeftAnti" in plan
     assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_tpch_q7_two_role_dims_broadcast(spark, entry):
-    """Nation joins twice (supplier role + customer role) — all four
-    dims broadcast; lineitem x orders stays the single shuffle join."""
-    plan = _plan(entry.queries()["tpch_q7"](spark, SF))
-    assert plan.count("BroadcastHashJoin") >= 4
-    assert "CartesianProduct" not in plan
-
-
-def test_tpch_q21_exists_and_not_exists_joins(spark, entry):
-    """The waiting-supplier pair: EXISTS → LeftSemi, NOT EXISTS →
-    LeftAnti, both with the non-equi different-supplier condition."""
-    plan = _plan(entry.queries()["tpch_q21"](spark, SF))
-    assert "LeftSemi" in plan
-    assert "LeftAnti" in plan
     assert "CartesianProduct" not in plan
 
 
@@ -387,51 +360,6 @@ def test_aqe_splits_skewed_join_partition(spark):
         for k, v in old.items():
             if v is not None:
                 spark.conf.set(k, v)
-
-
-def test_tpch_q2_min_cost_without_window(spark, entry):
-    """Q2's correlated min lowers to groupBy-min + equi-join back —
-    no Window (no global sort), dims broadcast, no cartesian beyond
-    the 1-row supplier-count broadcast inside the partsupp generator."""
-    plan = _plan(entry.queries()["tpch_q2"](spark, SF))
-    assert "Window" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
-def test_tpch_q8_dims_broadcast(spark, entry):
-    """Q8's 6-table star: every dim side (part, ASIA customers,
-    supplier-nation) broadcasts; only lineitem x orders may shuffle."""
-    plan = _plan(entry.queries()["tpch_q8"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
-def test_tpch_q9_partsupp_broadcasts(spark, entry):
-    """The generated partsupp is 4 rows/part — it must broadcast so
-    lineitem never shuffles for the (partkey, suppkey) cost lookup."""
-    plan = _plan(entry.queries()["tpch_q9"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
-def test_tpch_q11_single_agg_exchange(spark, entry):
-    """Q11's per-part aggregate shuffles on ps_partkey only; the
-    total/n_parts gate rides a 1-row broadcast. Catalyst duplicates the
-    per_part branch into the total's subtree (two identical exchanges —
-    both over the tiny generated partsupp, and eligible for runtime
-    ReusedExchange), so the pin is <=2 and never a third."""
-    plan = _plan(entry.queries()["tpch_q11"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert plan.count("Exchange hashpartitioning(ps_partkey") <= 2
-
-
-def test_tpch_q20_semi_join(spark, entry):
-    """The nested-IN chain lowers to aggregate -> equi-join -> LeftSemi,
-    never a nested-loop membership probe over lineitem."""
-    plan = _plan(entry.queries()["tpch_q20"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "LeftSemi" in plan
 
 
 def test_runtime_bloom_filter_prunes_fact_scan(spark):
@@ -640,27 +568,11 @@ def test_random_walks_equi_joins_only(spark, entry):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_neg_samples_broadcasts_vocab(spark, entry):
-    """Negative-index resolution is a broadcast hash join against the
-    vocab index — the corpus never shuffles on the sample index."""
-    plan = _plan(entry.queries()["neg_samples"](spark, SF))
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_cdc_apply_never_windows_the_snapshot(spark, entry):
     """apply_cdc reduces the CHANGES with a groupBy and joins once —
     the big base snapshot gets no Window and no cartesian."""
     plan = _plan(entry.queries()["cdc_apply"](spark, SF))
     assert "Window" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_lang_profile_broadcasts_the_profiles(spark, entry):
-    """The 40-row profile table broadcasts onto the doc-trigram stream;
-    scoring is an equi-join on the trigram."""
-    plan = _plan(entry.queries()["lang_profile"](spark, SF))
-    assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
 
@@ -687,17 +599,6 @@ def test_rake_keywords_no_join_operators(spark, entry):
     plan = _plan(entry.queries()["rake_keywords"](spark, SF))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "Window" in plan
-
-
-def test_decision_stump_shuffles_distinct_values_not_rows(spark, entry):
-    """The stacked-feature groupBy must partial-aggregate map-side (the
-    shuffle carries distinct (feature, value) pairs), and candidate
-    scoring must not join."""
-    plan = _plan(entry.queries()["stump_train"](spark, SF))
-    assert "partial_count" in plan or "partial_" in plan
-    assert "CartesianProduct" not in plan
-    assert "Generate" in plan  # stack() generator stayed JVM-side
     assert "Window" in plan
 
 
