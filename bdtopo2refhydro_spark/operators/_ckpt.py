@@ -23,7 +23,21 @@ slot contents intentionally survive — they back the returned DataFrame.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
+
+
+def _checkpoint_count(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eager localCheckpoint of ``df`` plus its row count, from one job.
+
+    The count is an Observation on the checkpointed plan: it fills while
+    the checkpoint's own job runs, where a ``count()`` afterwards is a
+    second scan (two more jobs under AQE). Eager only —
+    ``Observation.get`` blocks until a query over the observed plan has
+    run."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    return out, obs.get["n"]
 
 
 def backing_rdd(df: DataFrame):
@@ -47,11 +61,22 @@ class CheckpointSlots:
         before the old blocks go away, so nothing ever recomputes through
         a freed LogicalRDD."""
         out = df.localCheckpoint()
+        self._swap(slot, out)
+        return out
+
+    def checkpoint_count(self, df: DataFrame,
+                         slot: str = "state") -> tuple[DataFrame, int]:
+        """``checkpoint`` that also returns the row count, from the same
+        job (``_checkpoint_count``)."""
+        out, n = _checkpoint_count(df)
+        self._swap(slot, out)
+        return out, n
+
+    def _swap(self, slot: str, out: DataFrame) -> None:
         old = self._live.pop(slot, None)
         if old is not None:
             old.unpersist(False)
         self._live[slot] = backing_rdd(out)
-        return out
 
     def release(self, slot: str = "state") -> None:
         """Free a slot's blocks NOW — only when its DataFrame is no longer

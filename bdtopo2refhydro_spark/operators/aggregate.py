@@ -23,15 +23,27 @@ from ._local import SMALL_GRAPH_ROWS as _SMALL_GRAPH_ROWS
 from .graph import loop_profile
 
 
+def _fits_local(n_rows: int | None) -> bool:
+    """A caller's row bound that puts the graph on the single-task arm."""
+    return n_rows is not None and n_rows <= _SMALL_GRAPH_ROWS
+
+
 def _chain_roots(e: DataFrame, key: str, max_rounds: int = 64,
-                 exclude_nodes: DataFrame | None = None) -> DataFrame:
+                 exclude_nodes: DataFrame | None = None,
+                 n_rows: int | None = None) -> DataFrame:
     """Label each edge with the key of the last edge of its chain.
 
     successor(e) = unique edge f with f.NODEA == e.NODEB, valid only when
     e.NODEB is a pass-through node (in-degree 1 and out-degree 1).
     exclude_nodes('node') forces those nodes to be treated as junctions —
     chains break there (distance contraction excludes outlet nodes so an
-    outlet never disappears inside a chain)."""
+    outlet never disappears inside a chain).
+
+    n_rows: an upper bound on e's row count the caller already knows (cf.
+    spatial._candidates' poly_rows). At or under SMALL_GRAPH_ROWS the
+    single-task arm is returned as a lazy plan — no checkpoint, no count,
+    no job until a consumer runs. Otherwise the pointer table is
+    checkpointed and its size measured in the same job."""
     indeg = e.groupBy("NODEB").agg(F.count("*").alias("_in"))
     outdeg = e.groupBy("NODEA").agg(F.count("*").alias("_out"))
     passthrough = (
@@ -49,24 +61,29 @@ def _chain_roots(e: DataFrame, key: str, max_rounds: int = 64,
               "node")
         .select("k", "nk")
     )
-    from ._ckpt import CheckpointSlots
-
-    slots = CheckpointSlots()
-    ptr = slots.checkpoint(
+    ptr = (
         e.select(F.col(key).alias("k"))
         .join(nxt, "k", "left")
         .withColumn("p", F.coalesce("nk", "k"))
-        .select("k", "p"),
-        "ptr",
+        .select("k", "p")
     )
-    n_ptr = ptr.count()
-    if n_ptr <= _SMALL_GRAPH_ROWS:
+
+    def _local(ptr: DataFrame) -> DataFrame:
         # small-graph fast path: single-task pointer chase (equality with
         # the jumping loop asserted in tests)
         from ._local import local_chain_roots
 
         out = local_chain_roots(ptr)
         return out.select(F.col("k").alias(key), F.col("p").alias("chain_id"))
+
+    if _fits_local(n_rows):
+        return _local(ptr)
+    from ._ckpt import CheckpointSlots
+
+    slots = CheckpointSlots()
+    ptr, n_ptr = slots.checkpoint_count(ptr, "ptr")
+    if n_ptr <= _SMALL_GRAPH_ROWS:
+        return _local(ptr)
 
     def _sig(df: DataFrame):
         # order-independent state fingerprint — one aggregate beats a
@@ -155,7 +172,8 @@ N_CHAIN_BUCKETS = 64
 
 
 def aggregate_segments(edges_nodes: DataFrame, key: str = "url",
-                       geom_col: str = "geom_wkb") -> DataFrame:
+                       geom_col: str = "geom_wkb",
+                       n_rows: int | None = None) -> DataFrame:
     """Collapse degree-2 chains into single segments. Returns one row per
     chain: GID (chain id), stitched geom_wkb, chain NODEA/NODEB, LENGTH,
     n_reaches, first_url (upstream-most reach key, for J8 attribute
@@ -177,7 +195,13 @@ def aggregate_segments(edges_nodes: DataFrame, key: str = "url",
     single-edge split removes the remaining per-chain pandas overhead:
     3.5s → ~0.4s for 1.8k chains at sf0.1). Chain sizes are counted on
     the narrow (key, chain_id) roots table, so no geometry bytes shuffle
-    for the single-edge majority at all."""
+    for the single-edge majority at all.
+
+    n_rows: an upper bound on edges_nodes' row count, when the caller
+    knows one. At or under SMALL_GRAPH_ROWS the whole aggregation stays a
+    lazy plan (_chain_roots' single-task arm) and starts no job until the
+    result is consumed; otherwise the edges are counted and the labelled
+    edges pinned first."""
     merge_one = _merge_chain_fn(key)
 
     def _merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -187,13 +211,17 @@ def aggregate_segments(edges_nodes: DataFrame, key: str = "url",
         )
 
     e = edges_nodes.select(key, geom_col, "NODEA", "NODEB")
-    # pin roots (consumed by the sizes agg AND the chained join) and
-    # chained (consumed by both the single- and multi-edge branches) —
-    # without this each consumer replays the whole chain-roots plan
-    roots = _chain_roots(e, key).localCheckpoint(eager=False)
-    sizes = roots.groupBy("chain_id").agg(F.count("*").alias("_n"))
-    chained = e.join(roots.join(sizes, "chain_id"), key) \
-        .localCheckpoint(eager=False)
+    # chain sizes by a window, not a groupBy joined back: the roots then
+    # have one consumer, so the single-task chase runs once per query
+    sized = _chain_roots(e, key, n_rows=n_rows).withColumn(
+        "_n", F.count(F.lit(1)).over(Window.partitionBy("chain_id")))
+    chained = e.join(sized, key)
+    if not _fits_local(n_rows):
+        # chained feeds both the single- and multi-edge branches. The pin
+        # is not lazy: under AQE, localCheckpoint(eager=False) runs every
+        # shuffle and broadcast stage below the final one at call time.
+        # The bounded arm skips it, so an unconsumed result costs no job.
+        chained = chained.localCheckpoint(eager=False)
     # canonical little-endian LineString header: 01 02 00 00 00
     canonical = (
         F.col(geom_col).isNotNull()

@@ -205,13 +205,17 @@ def snap_endpoints_knn(edges: DataFrame, key: str = "url",
     return edges.join(a, key).join(b, key)
 
 
-def _adjacency(edges_nodes: DataFrame, direction: str) -> DataFrame:
+def _adjacency(edges_nodes: DataFrame,
+               direction: str) -> tuple[DataFrame, int]:
     """(node, nbr) adjacency for the walk direction, built ONCE before the
-    traversal loop: 'up' walks against flow (B→A), 'down' with flow (A→B),
-    'both' undirected (the reference's DIRECTION:2 at
-    create_connected_reference_hydro.py:191-197). One materialized
+    traversal loop, and its row count: 'up' walks against flow (B→A),
+    'down' with flow (A→B), 'both' undirected (the reference's DIRECTION:2
+    at create_connected_reference_hydro.py:191-197). One materialized
     adjacency turns each BFS round into a single broadcast join instead of
-    two joins + a union over the edge table."""
+    two joins + a union over the edge table; the count that sizes the
+    traversal comes from the same job (_ckpt._checkpoint_count)."""
+    from ._ckpt import _checkpoint_count
+
     out = []
     if direction in ("down", "both"):
         out.append(edges_nodes.select(F.col("NODEA").alias("node"),
@@ -222,7 +226,7 @@ def _adjacency(edges_nodes: DataFrame, direction: str) -> DataFrame:
     adj = out[0]
     for o in out[1:]:
         adj = adj.union(o)
-    return adj.localCheckpoint()
+    return _checkpoint_count(adj)
 
 
 def connected_components(adj: DataFrame, max_rounds: int = 64,
@@ -324,8 +328,7 @@ def select_connected(edges_nodes: DataFrame, seed_nodes: DataFrame,
     if algorithm == "cc" and direction != "both":
         raise ValueError("algorithm='cc' requires direction='both' — "
                          "directed reachability is not a component query")
-    adj = _adjacency(edges_nodes, direction)
-    n_adj = adj.count()
+    adj, n_adj = _adjacency(edges_nodes, direction)
     bounded = max_iter is not None
     if (n_adj <= SMALL_GRAPH_ROWS and not force_distributed and not bounded
             and algorithm in ("auto", "cc")):

@@ -182,10 +182,12 @@ def distance_from_outlet(edges_nodes: DataFrame, outlet_nodes: DataFrame,
     create_connected_reference_hydro.py:202-209) and G5
     (fct:measurenetworkfromoutlet, create_5m_width_hydro_network.py:267-273).
     """
-    e = edges_nodes.select(F.col("NODEA").alias("src"),
+    from ._ckpt import _checkpoint_count
+
+    e, n_e = _checkpoint_count(
+        edges_nodes.select(F.col("NODEA").alias("src"),
                            F.col("NODEB").alias("dst"),
-                           F.col(len_col).alias("_len")).localCheckpoint()
-    n_e = e.count()
+                           F.col(len_col).alias("_len")))
     bounded = max_iter is not None
     if (n_e <= _SMALL_GRAPH_ROWS and not force_distributed and not bounded
             and algorithm in ("auto", "contract", "_local_or_rounds")):

@@ -108,19 +108,28 @@ def run_reference_network(edges: DataFrame, outlet_polygons: DataFrame,
     """The flagship query ~ create_connected_reference_hydro.py:40-278:
     dedupe → node ids → outlet spatial join → connectivity traversal →
     principal stem → (troncon) → segment aggregation → (segment).
-    Returns (troncon_df, segment_df). with_segments=False skips A3 and
-    returns (troncon WITH node/len working columns, None) so a
-    checkpointing driver can materialize the traversal once and derive
-    segments from the checkpoint (scripts/submit_reference_network.py)."""
+    Returns (troncon_df, segment_df). Every stage runs once, and only
+    when an output that needs it is consumed: with segments, troncon is
+    pinned once (after G4 when the stem runs) and segment is a lazy plan
+    over those same blocks, so an unused segment costs no job.
+    with_segments=False skips A3 and returns (troncon WITH node/len
+    working columns, None), unpinned, so a checkpointing driver can
+    materialize the traversal once and derive segments from the
+    checkpoint (scripts/submit_reference_network.py)."""
+    from ..operators._ckpt import _checkpoint_count
+
     metrics = metrics if metrics is not None else TraversalMetrics()
     # A2 (:150-156)
     e = dedup_geometries(edges, "geom_wkb")
-    # G1 (:160-166)
+    # G1 (:160-166) — the checkpoint's job also counts e, an upper bound
+    # on troncon (troncon ⊆ e) that sizes A3 below without another job
     e = identify_network_nodes(e, key, tolerance=tolerance)
-    e = e.withColumn("len", U.st_length("geom_wkb")).localCheckpoint()
+    e, n_e = _checkpoint_count(e.withColumn("len", U.st_length("geom_wkb")))
     # J1 outlet spatial join (:181-187) — seed_edges feeds three consumers
-    # (both seed_nodes legs + outlet_nodes); checkpoint lazily so the
-    # spatial join runs once, not once per consumer
+    # (both seed_nodes legs + outlet_nodes). localCheckpoint(eager=False)
+    # pins it so the spatial join runs once, not once per consumer; under
+    # AQE the call itself runs the join's shuffle and broadcast stages, so
+    # it is not lazy
     seeded = select_by_location(e, outlet_polygons, key, cell_size=cell_size)
     seed_edges = seeded.filter(F.col("selected")).localCheckpoint(eager=False)
     seed_nodes = (
@@ -129,12 +138,12 @@ def run_reference_network(edges: DataFrame, outlet_polygons: DataFrame,
         .distinct()
     )
     # G2 traversal (:191-197) — visited is consumed twice by
-    # edges_touching (NODEA + NODEB semi-joins); troncon three times by
-    # principal_stem (distance input, route scoring, final semi-join) plus
-    # the returned output. Without the lazy checkpoints every consumer
-    # re-runs the whole upstream traversal sub-plan (measured: 3 of the
-    # 10 SQL executions of a warm sf0.1 run were recomputes, 80 jobs
-    # total — the traversal executed 4x).
+    # edges_touching (NODEA + NODEB semi-joins); the connected set three
+    # times by principal_stem (distance input, route scoring, final
+    # semi-join). Both are pinned for the same reason as seed_edges:
+    # without the pins every consumer re-runs the traversal sub-plan
+    # (measured: 3 of the 10 SQL executions of a warm sf0.1 run were
+    # recomputes, 80 jobs total — the traversal executed 4x)
     visited = select_connected(e, seed_nodes, "both", metrics=metrics) \
         .localCheckpoint(eager=False)
     connected_keys = edges_touching(e, visited, key)
@@ -146,9 +155,13 @@ def run_reference_network(edges: DataFrame, outlet_polygons: DataFrame,
         troncon = principal_stem(troncon, outlet_nodes, key)
     if not with_segments:
         return troncon, None
+    if apply_principal_stem:
+        # the stem's result is read by the caller AND by A3: pinned once,
+        # so the stem runs once and both read its blocks
+        troncon = troncon.localCheckpoint(eager=False)
     # A3 aggregate segments (:241-249) — node cols already present (second
     # G1 pass in the reference is only needed because QGIS drops them)
-    segment = aggregate_segments(troncon, key)
+    segment = aggregate_segments(troncon, key, n_rows=n_e)
     troncon_out = troncon.drop("NODEA", "NODEB", "len")
     return troncon_out, segment
 
@@ -185,8 +198,8 @@ def run_width_network(edges: DataFrame, surfaces: DataFrame,
     e = identify_network_nodes(e, key, tolerance=tolerance)
     e = e.withColumn("len", U.st_length("geom_wkb")).localCheckpoint()
     # J2 outlet reaches (:201-207) — consumed twice (kept-union +
-    # outlet_edges semi-join); lazy checkpoint so the outlet spatial join
-    # runs once (same reuse rule as run_reference_network)
+    # outlet_edges semi-join); pinned so the outlet spatial join runs once
+    # (same reuse rule as run_reference_network)
     outlet_keys = extract_by_location(e, outlet_polygons, key,
                                       cell_size=cell_size).select(key) \
         .localCheckpoint(eager=False)

@@ -12,6 +12,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def resolve_shuffle_partitions(cores: int | str,
+                               shuffle_partitions: int | None) -> int:
+    """spark.sql.shuffle.partitions for a session: an explicit count wins;
+    otherwise one partition per core, or 32 when ``cores`` is not a
+    number (``local[*]``)."""
+    if shuffle_partitions:
+        return shuffle_partitions
+    return int(cores) if str(cores).isdigit() else 32
+
+
 def get_spark(
     app_name: str = "bdtopo2refhydro_spark",
     cores: int | str | None = None,
@@ -19,7 +29,7 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     cores = cores or os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle_partitions = shuffle_partitions or int(cores) if str(cores).isdigit() else 32
+    shuffle_partitions = resolve_shuffle_partitions(cores, shuffle_partitions)
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)

@@ -301,6 +301,48 @@ def test_local_and_distributed_paths_agree(spark, tree, outlet):
     assert roots_local == roots_dist
 
 
+def _segments_by_arm(e):
+    """aggregate_segments rows from A3's three arms, sorted by GID: lazy
+    under a caller's row bound, measured single-task, and distributed
+    pointer jumping."""
+    import bdtopo2refhydro_spark.operators.aggregate as A
+
+    def rows(df):
+        return sorted(df.collect(), key=lambda r: r.GID)
+
+    lazy = rows(aggregate_segments(e, n_rows=e.count()))
+    local = rows(aggregate_segments(e))
+    old = A._SMALL_GRAPH_ROWS
+    try:
+        A._SMALL_GRAPH_ROWS = -1  # force the jumping loop
+        dist = rows(aggregate_segments(e))
+    finally:
+        A._SMALL_GRAPH_ROWS = old
+    return lazy, local, dist
+
+
+def test_aggregate_segments_arms_agree(spark, tree):
+    """A3's lazy bounded arm, its measured local arm and the distributed
+    pointer-jumping arm return identical segments — GID, stitched WKB,
+    end nodes, LENGTH, n_reaches, first_url — not just identical roots.
+    Cases: the hand-drawn tree (junction-dense, so every chain is one
+    reach) and a ring of pass-through nodes closed at a junction that
+    also drains to an outflow (one stitched 4-reach chain). A ring with no
+    junction at all is out of contract (operators/_local.py, cycles)."""
+    ring = [(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0)]
+    rows = [(f"r{i}", linestring_wkb([ring[i], ring[(i + 1) % 4]]))
+            for i in range(4)]
+    rows.append(("t0", linestring_wkb([(0.0, 0.0), (-10.0, -10.0)])))
+    ring_e = identify_network_nodes(
+        spark.createDataFrame(rows, "url string, geom_wkb binary"),
+        tolerance=0.5)
+    for e, n_segments, n_longest in ((tree, 7, 1), (ring_e, 2, 4)):
+        lazy, local, dist = _segments_by_arm(e)
+        assert lazy == local == dist
+        assert len(lazy) == n_segments
+        assert max(r.n_reaches for r in lazy) == n_longest
+
+
 def _deep_chain_edges(spark, n: int, branch_every: int = 0):
     """Directed path graph e_i: node i+1 → i with integer lens (exact in
     any summation order); node 0 is the outlet end. branch_every adds a
@@ -464,7 +506,7 @@ def test_auto_strategy_follows_chain_fraction(spark):
 
 
 def test_subtree_counts_and_tree_betweenness_golden(spark):
-    """Hand-computed tree:        0
+    r"""Hand-computed tree:        0
                                  / \
                                 1   2
                                / \    \

@@ -623,3 +623,85 @@ def test_topn_limit_plans_as_take_ordered(spark, entry):
     plan = _plan(entry.queries()["topn_limit"](spark, SF))
     assert "TakeOrderedAndProject" in plan
     assert "GlobalLimit" not in plan
+
+
+# ---------------------------------------------------------------------------
+# reference_network job budget. Jobs are counted through a job group: the
+# AQE and broadcast threads that start most of this pipeline's jobs
+# inherit it.
+# ---------------------------------------------------------------------------
+
+def _jobs(spark, fn) -> int:
+    """Number of Spark jobs started while ``fn()`` runs."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _refnet(spark, entry, **kw):
+    """plans.run_reference_network with the reference_network driver
+    query's arguments on the sf0.001 tree edges."""
+    from bdtopo2refhydro_spark.plans import run_reference_network
+
+    return run_reference_network(
+        entry._tree_geom_edges(spark, SF), entry._outlet_band(spark),
+        tolerance=1.0, cell_size=5000.0, **kw)
+
+
+def _force_troncon(spark, entry, **kw):
+    return lambda: _refnet(spark, entry, **kw)[0].select("url").collect()
+
+
+def _force_both(spark, entry):
+    def run():
+        troncon, segment = _refnet(spark, entry)
+        troncon.select("url").collect()
+        segment.collect()
+    return run
+
+
+def test_reference_network_unconsumed_segment_costs_no_job(spark, entry):
+    """A3 runs only when the segment output is consumed: forcing troncon
+    alone starts exactly the jobs of a with_segments=False run."""
+    alone = _jobs(spark, _force_troncon(spark, entry))
+    no_a3 = _jobs(spark, _force_troncon(spark, entry, with_segments=False))
+    assert alone == no_a3
+
+
+def test_reference_network_small_graph_never_counts(spark, entry,
+                                                    monkeypatch):
+    """Below SMALL_GRAPH_ROWS no graph or A3 gate pays for a count(): G1's
+    row count comes from its own checkpoint job, the other gates from
+    observed checkpoints. The one count left is J1's broadcast gate,
+    which counts a LIMIT of the polygon side (early-stopping)."""
+    import sys
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    count = DataFrame.count
+
+    def _no_count(self):
+        if sys._getframe(1).f_code.co_name == "_candidates":
+            return count(self)
+        raise AssertionError("DataFrame.count on the small-graph path")
+
+    monkeypatch.setattr(DataFrame, "count", _no_count)
+    troncon, segment = _refnet(spark, entry)
+    assert troncon.select("url").collect()
+    assert segment.collect()
+
+
+def test_reference_network_job_budget(spark, entry):
+    """Upper bounds at the measured values on 4 cores (8 shuffle
+    partitions): 33 jobs for troncon alone, 50 for troncon plus
+    segment."""
+    assert _jobs(spark, _force_troncon(spark, entry)) <= 33
+    assert _jobs(spark, _force_both(spark, entry)) <= 50
